@@ -234,10 +234,10 @@ def _q_kg_nodes(spark, sf_dir):
     from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
                                            link_mentions)
     from ie_spark.pipeline.canonicalize import (
-        build_identity_edges, canonical_nodes, connected_components)
+        build_identity_edges, canonical_nodes, connected_components_star)
     mentions, triples = _kg_extracted_once(spark)
     linked = link_mentions(mentions, build_candidate_dict(spark))
-    labels = connected_components(build_identity_edges(linked, triples))
+    labels = connected_components_star(build_identity_edges(linked, triples))
     return canonical_nodes(labels, linked, kb=kb_metadata(spark))
 
 
@@ -258,10 +258,10 @@ def _q_kg_edges(spark, sf_dir):
 def _kg_edges_build(spark, sf_dir):
     from ie_spark.pipeline.linking import build_candidate_dict, link_mentions
     from ie_spark.pipeline.canonicalize import (
-        build_identity_edges, canonical_mention_map, connected_components)
+        build_identity_edges, canonical_mention_map, connected_components_star)
     mentions, triples = _kg_extracted_once(spark)
     linked = link_mentions(mentions, build_candidate_dict(spark))
-    labels = connected_components(build_identity_edges(linked, triples))
+    labels = connected_components_star(build_identity_edges(linked, triples))
     # the stem→node map is KB-canonicalization-scoped (distinct LINKED
     # entity stems, not the open vocabulary) — explicitly broadcast so a
     # skewed-stem regression to sort-merge can't land silently

@@ -29,7 +29,7 @@ they hold at 10^12-turn scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -149,45 +149,49 @@ def pagerank_mass(edges: DataFrame, iterations: int = 5,
     W = src's total out-weight, damping is ``(85·Σshares) div 100`` —
     integer division on both engines, so the DuckDB oracle reproduces the
     result bit-for-bit with no float summation-order hazard.  Headroom:
-    per-edge ``mass·w`` and the damped sum must fit int64 — with the
-    default scale 10^9 that holds to ~10^5 nodes × 10^4-multiplicity
-    edges; at larger graphs lower ``scale`` (rank resolution degrades
+    total mass never exceeds ``scale·n_nodes``, so per-edge ``mass·w`` and
+    the damped ``85·Σshares`` fit int64 while
+    ``scale·n_nodes·max(max_w, 85) < 2^63`` — with the default scale 10^9
+    that holds to ~10^5 nodes × 10^4-multiplicity edges.  A graph past it
+    raises ``ValueError``; lower ``scale`` for it (rank resolution degrades
     gracefully; relative order is unchanged until quotients collide).
 
-    Per iteration: one join of the mass vector with the out-weight table
-    (key: node), one join onto the weighted pair list (key: src), one
-    partial-agg sum keyed by dst, one left join back onto the node list —
-    all hash-partitioned on the same node-id key; lineage is truncated
-    per iteration with a lazy local checkpoint so plan compile stays O(1)
-    in the iteration count.
+    The weighted pairs are joined with their sources' out-weights once,
+    into a checkpointed (src, dst, w, ow) table; ``n_nodes`` and ``max_w``
+    for the headroom check come from the node list built on it, in the
+    action that materializes both.  Per iteration: one join of that table
+    with the mass vector (key: src), then one partial-agg sum keyed by dst
+    over the shares plus a zero share per node (so every node keeps a row
+    without a join back onto the node list).  Lineage is truncated per
+    iteration with a lazy local checkpoint so plan compile stays O(1) in
+    the iteration count.
     """
     pairs = (edges.select("src", "dst")
              .filter(F.col("src") != F.col("dst"))
-             .groupBy("src", "dst").agg(F.count("*").alias("w"))
+             .groupBy("src", "dst").agg(F.count("*").alias("w")))
+    outw = pairs.groupBy("src").agg(F.sum("w").alias("ow"))
+    pw = pairs.join(outw, "src").localCheckpoint(eager=False)
+    nodes = (pw.select(F.col("src").alias("node"), "w")
+             .unionByName(pw.select(F.col("dst").alias("node"), "w"))
+             .groupBy("node").agg(F.max("w").alias("w"))
              .localCheckpoint(eager=False))
-    nodes = (pairs.select(F.col("src").alias("node"))
-             .unionByName(pairs.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint(eager=False))
-    # reused by every iteration's mass plan — checkpoint once or the
-    # out-weight shuffle over the full pair list re-executes per iteration
-    outw = (pairs.groupBy(F.col("src").alias("node"))
-            .agg(F.sum("w").alias("ow"))
-            .localCheckpoint(eager=False))
+    n_nodes, max_w = nodes.agg(F.count("*"), F.max("w")).first()
+    if n_nodes and scale * n_nodes * max(max_w, 85) >= 2 ** 63:
+        raise ValueError(
+            f"pagerank_mass would overflow int64: scale {scale} x "
+            f"{n_nodes} nodes x max(multiplicity {max_w}, 85) >= 2^63; "
+            f"lower scale")
     base = scale * 15 // 100
-    mass = nodes.withColumn("mass", F.lit(scale).cast("long"))
+    zero = nodes.select("node", F.lit(0).cast("long").alias("share"))
+    mass = nodes.select("node", F.lit(scale).cast("long").alias("mass"))
     for _ in range(iterations):
-        shares = (mass.join(outw, "node")
-                  .select(F.col("node").alias("src"), "mass", "ow"))
-        contrib = (pairs.join(shares, "src")
-                   .select(F.col("dst").alias("node"),
-                           F.expr("(mass * w) div ow").alias("share"))
-                   .groupBy("node")
-                   .agg(F.sum("share").alias("c")))
-        mass = (nodes.join(contrib, "node", "left")
-                .select("node",
-                        (F.lit(base).cast("long") +
-                         F.expr("(85 * coalesce(c, cast(0 as bigint))) "
-                                "div 100")).alias("mass"))
+        shares = (pw.join(mass.withColumnRenamed("node", "src"), "src")
+                  .select(F.col("dst").alias("node"),
+                          F.expr("(mass * w) div ow").alias("share")))
+        mass = (shares.unionByName(zero)
+                .groupBy("node")
+                .agg((F.lit(base).cast("long") +
+                      F.expr("(85 * sum(share)) div 100")).alias("mass"))
                 .localCheckpoint(eager=False))
     out = mass.select("node", F.col("mass").alias("rank_mass"))
     return out.orderBy(F.desc("rank_mass"), F.asc("node")) if sort else out
@@ -341,8 +345,9 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
     and write one parquet dir per pass under ``out_dir`` — the batch job
     a KG consumer schedules after each pipeline run.  Outputs are
     unsorted (a global output sort buys nothing for a table handed to
-    downstream jobs); per-pass row counts and wall seconds come back as
-    a stats dict for the caller's JSON line.
+    downstream jobs).  Per-pass stats come back as a dict for the caller's
+    JSON line: ``rows`` is counted by an observation on the pass's own
+    write (no read-back job), ``sec`` is the pass's wall seconds.
     """
     import os as _os
     import time as _time
@@ -374,9 +379,11 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
         t0 = _time.time()
         out = runners[name](e)
         path = _os.path.join(out_dir, name)
-        out.write.mode("overwrite").parquet(path)
+        rows = Observation()
+        (out.observe(rows, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(path))
         stats["passes"][name] = {
-            "rows": spark.read.parquet(path).count(),
+            "rows": int(rows.get["n"]),
             "sec": round(_time.time() - t0, 3),
         }
     return stats

@@ -8,17 +8,19 @@ scale: vertices are mention stems and KB entity ids; edges are
   - _AKA alias pairs (appositives, ``ccg.py:1073-1183``)
   - _POSS is NOT an identity edge (ownership ≠ sameness)
 
-Algorithm: iterative min-label propagation over DataFrames (HashToMin
-style), early-stopping on a converged count and ``localCheckpoint`` to
-truncate lineage — no GraphFrames dependency.  The mention–entity graph is
-near-bipartite and shallow (SURVEY.md §7.3), so convergence is a handful of
-iterations; each iteration is one shuffle on the vertex id, which AQE
-coalesces as components collapse.
+Algorithm: alternating large-star / small-star contraction over
+DataFrames (``connected_components_star``) with ``localCheckpoint`` to
+truncate lineage — no GraphFrames dependency.  Each round is a window over
+the node id per star step plus one distinct, and shrinks the edge set; one
+action per round tests whether it has become a star forest, the fixed point
+where every node points at its component's minimum key.  O(log n) rounds
+even on long chains; a run that has not converged after ``max_iter``
+rounds raises instead of returning partial labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -54,99 +56,71 @@ def build_identity_edges(linked_mentions: DataFrame,
     return link_edges.unionByName(aka_edges).distinct()
 
 
+def _is_star_forest(e: DataFrame) -> bool:
+    """True when every child ``u`` of the (u > v) edge list has one parent
+    and no parent is also a child.  One shuffle on the node id, one action."""
+    ends = (e.select(F.col("u").alias("node"), F.lit(1).alias("child"),
+                     F.lit(0).alias("parent"))
+            .unionByName(e.select(F.col("v").alias("node"),
+                                  F.lit(0).alias("child"),
+                                  F.lit(1).alias("parent"))))
+    bad = (ends.groupBy("node")
+           .agg(F.sum("child").alias("n_parents"),
+                F.max("parent").alias("is_parent"))
+           .filter((F.col("n_parents") > 1) |
+                   ((F.col("n_parents") == 1) & (F.col("is_parent") == 1))))
+    return bad.isEmpty()
+
+
 def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm).  Converges in O(log n) rounds even on
-    long chains and *shrinks* the edge set as it runs, unlike plain label
-    propagation whose every round joins the full edge set — this is the
-    10^12-scale path.
-
-    large-star: per node u, link every neighbor v > u to m = min(N(u) ∪ u)
-    small-star: orient edges large→small; per node u, link u and every
-                neighbor v ≤ u to m
-
-    → (node, component) with component = min node key (same contract as
-    ``connected_components``)."""
-    # canonical orientation: keep pairs as (big, small)
-    e = (edges.select(F.greatest("src", "dst").alias("u"),
-                      F.least("src", "dst").alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint())
-
-    for _ in range(max_iter):
-        # ---- large-star ----
-        # neighborhoods over symmetric edges
-        sym = e.select("u", "v").union(e.select(F.col("v").alias("u"),
-                                                F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (sym.join(m, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v")))
-        e1 = large.distinct()
-        # ---- small-star ----
-        sym1 = e1.select("u", "v")  # already oriented u > v by construction
-        m2 = sym1.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        small = (sym1.join(m2, "u")
-                 .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                 .union(m2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-                 .filter(F.col("a") != F.col("b"))
-                 .select(F.greatest("a", "b").alias("u"),
-                         F.least("a", "b").alias("v"))
-                 .distinct())
-        new_e = small.localCheckpoint()
-        changed = (new_e.exceptAll(e).limit(1).count()
-                   + e.exceptAll(new_e).limit(1).count())
-        e = new_e
-        if changed == 0:
-            break
-
-    # at convergence every node points at its component min
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = (e.select(F.col("v").alias("node")).distinct()
-             .join(e.select(F.col("u").alias("node")).distinct(),
-                   "node", "left_anti")
-             .withColumn("component", F.col("node")))
-    return labels.unionByName(roots).distinct()
-
-
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """edges (src, dst) → (node, component) with component = min node key
     in the component (deterministic canonical representative).
 
-    Iterative min-label propagation; each round:
-      label(n) = min(label(n), min over neighbors' labels)
-    stop when no label changes.  O(diameter) rounds; our graphs are shallow.
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    algorithm) over edges oriented (u, v) with u > v:
+
+    large-star: per node u, link every neighbor v > u to m = min(N(u) ∪ u)
+    small-star: per node u, link u and every neighbor v < u to m
+
+    Each neighbor minimum is a window over ``u`` (one shuffle, no join
+    back).  Rounds keep connectivity and shrink the edge set; they stop
+    once it is a star forest (every child has one parent, no parent is a
+    child), where each component is one star centred on its minimum key.
+    Raises ``RuntimeError`` when that takes more than ``max_iter`` rounds.
     """
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+    by_u = Window.partitionBy("u")
+    e = (edges.select(F.greatest("src", "dst").alias("u"),
+                      F.least("src", "dst").alias("v"))
+         .filter(F.col("u") != F.col("v"))
+         .distinct().localCheckpoint(eager=False))
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_iter:
+            raise RuntimeError(f"connected components did not converge in "
+                               f"{max_iter} rounds")
+        rounds += 1
+        # ---- large-star over the symmetric edge list ----
+        sym = e.unionByName(e.select(F.col("v").alias("u"),
+                                     F.col("u").alias("v")))
+        large = (sym.withColumn("m", F.least(F.min("v").over(by_u), "u"))
+                 .filter(F.col("v") > F.col("u"))
+                 .select(F.col("v").alias("u"), F.col("m").alias("v")))
+        # ---- small-star: every v < u already, so m = min(N(u)) ----
+        small = (large.withColumn("m", F.min("v").over(by_u))
+                 .select(F.explode(F.array(
+                     F.struct(F.col("v").alias("a"), "m"),
+                     F.struct(F.col("u").alias("a"), "m"))).alias("p"))
+                 .filter(F.col("p.a") != F.col("p.m"))
+                 .select(F.greatest("p.a", "p.m").alias("u"),
+                         F.least("p.a", "p.m").alias("v")))
+        e = small.distinct().localCheckpoint(eager=False)
 
-    labels = (sym.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("component", F.col("node")))
-
-    for _ in range(max_iter):
-        # neighbor labels: join edges with labels on dst, min per src
-        neigh = (sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-                 .groupBy("src").agg(F.min("component").alias("n_comp"))
-                 .withColumnRenamed("src", "node"))
-        new_labels = (labels.join(neigh, "node", "left")
-                      .select("node",
-                              F.least(F.col("component"),
-                                      F.coalesce(F.col("n_comp"),
-                                                 F.col("component")))
-                              .alias("component")))
-        new_labels = new_labels.localCheckpoint()
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.component") != F.col("o.component"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    # a star forest: children label with their parent, parents with
+    # themselves (no parent is a child, so the two sets are disjoint)
+    roots = e.select(F.col("v").alias("node")).distinct()
+    return (e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+            .unionByName(roots.withColumn("component", F.col("node"))))
 
 
 def canonical_nodes(labels: DataFrame, linked_mentions: DataFrame,

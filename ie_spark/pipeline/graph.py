@@ -38,7 +38,7 @@ def merge_upsert(spark: SparkSession, df: DataFrame, target: str,
     which matches MERGE INTO ... WHEN NOT MATCHED THEN INSERT semantics for
     immutable fact rows (triples/edges are append-only facts).
     """
-    if _iceberg_available(spark) and not target.startswith(("/", "file:")):
+    if not target.startswith(("/", "file:")) and _iceberg_available(spark):
         df.createOrReplaceTempView("_merge_src")
         on = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
         spark.sql(

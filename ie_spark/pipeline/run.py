@@ -17,14 +17,14 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ie_spark.pipeline.canonicalize import (
     build_identity_edges,
     canonical_mention_map,
     canonical_nodes,
-    connected_components,
+    connected_components_star as connected_components,
 )
 from ie_spark.pipeline.extract import (
     extract_all,
@@ -79,8 +79,10 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
 
     # 1. single-pass extraction (one scan, one Arrow UDF pass, no shuffle
     #    beyond the explicit repartition above), materialized once then
-    #    split from storage
+    #    split from storage; the turn count rides on that write
     staged = os.path.join(out_dir, "_extracted")
+    turns = Observation()
+    transcripts = transcripts.observe(turns, F.count(F.lit(1)).alias("n"))
     extract_all(transcripts).write.mode("overwrite").parquet(staged)
     combined = spark.read.parquet(staged)
     mentions, triples = split_combined(combined)
@@ -130,7 +132,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
 
     stats = {
         "job_id": job_id,
-        "n_turns": transcripts.count(),
+        "n_turns": int(turns.get["n"]),
         "n_mentions": mentions.count(),
         "n_triples": triples.count(),
         "n_nodes": spark.read.parquet(os.path.join(out_dir, "nodes")).count(),

@@ -167,6 +167,14 @@ def test_pagerank_cross_engine(spark):
     assert got == want
 
 
+def test_pagerank_overflow_raises(spark):
+    """scale · n_nodes · max multiplicity past int64 raises instead of
+    wrapping: 3 nodes at scale 2^62 cannot fit."""
+    rows = [("a", "b"), ("b", "c"), ("c", "a")]
+    with pytest.raises(ValueError, match="overflow int64"):
+        pagerank_mass(_edges_df(spark, rows), scale=2 ** 62)
+
+
 def test_pagerank_semantics(spark):
     """Sink-heavy chain: a/b/c → s → t.  s forwards ALL its mass to the
     dangling t, so t ends highest, s second; source-only nodes keep
@@ -190,22 +198,75 @@ def test_pagerank_semantics(spark):
 # ---------------------------------------------------------------------------
 
 
+def _chain(n):
+    return [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(n)]
+
+
+def _cc_graphs():
+    """Small dense graphs, larger sparse ones (many components) and a
+    12-edge chain (diameter 12, several star rounds)."""
+    graphs = [_random_rows(seed) for seed in (0, 1, 2)]
+    for seed in (0, 1, 2, 3):
+        r = random.Random(seed)
+        nodes = [f"n{i:02d}" for i in range(r.randint(5, 28))]
+        pairs = {(r.choice(nodes), r.choice(nodes))
+                 for _ in range(r.randint(3, 40))}
+        graphs.append(sorted((a, b) for a, b in pairs if a != b))
+    return graphs + [_chain(12)]
+
+
 def test_components_cross_engine_and_union_find(spark):
     """Star-contraction CC equals both the union-find reference and the
-    driver oracle's recursive-closure SQL tail on random graphs."""
+    DuckDB oracle's recursive-closure SQL tail on random graphs and on a
+    long chain."""
     from __spark_entry__ import _components_sql_tail
     from ie_spark.pipeline.canonicalize import connected_components_star
-    for seed in (0, 1, 2):
-        rows = _random_rows(seed)
+    for i, rows in enumerate(_cc_graphs()):
         edges = spark.createDataFrame(rows, "src string, dst string")
         got = sorted((r["node"], r["component"])
                      for r in connected_components_star(edges).collect())
-        assert got == sorted(_cc_ref(rows).items()), f"seed={seed}"
+        assert got == sorted(_cc_ref(rows).items()), f"graph {i}"
         sql = (f"WITH RECURSIVE e(src, dst) AS "
                f"(SELECT * FROM (VALUES {_vals(rows)})), "
                f"{_components_sql_tail()}")
         want = sorted(duckdb.sql(sql).fetchall())
-        assert got == want, f"seed={seed}"
+        assert got == want, f"graph {i}"
+
+
+def test_components_raise_when_not_converged(spark):
+    """A chain needs several star rounds; a cap below that must raise
+    rather than return partial labels."""
+    from ie_spark.pipeline.canonicalize import connected_components_star
+    edges = spark.createDataFrame(_chain(12), "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components_star(edges, max_iter=1)
+
+
+def _jobs(spark, name, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_iterative_passes_job_budget(spark):
+    """Spark jobs per call of the iterative passes, so an extra action
+    per round or iteration shows up: star CC runs one convergence action
+    per round, pagerank one headroom action plus the final collect.  The
+    ceilings sit a few jobs above the measured counts (CC 25, pagerank
+    29); the previous shapes took 77 and 45."""
+    from ie_spark.pipeline.canonicalize import connected_components_star
+    chain = spark.createDataFrame(_chain(12), "src string, dst string")
+    n_cc = _jobs(spark, "cc_budget",
+                 lambda: connected_components_star(chain).collect())
+    assert 0 < n_cc <= 30, n_cc
+    df = _edges_df(spark, _random_rows(0, multi=True))
+    n_pr = _jobs(spark, "pagerank_budget",
+                 lambda: pagerank_mass(df, iterations=5).collect())
+    assert 0 < n_pr <= 34, n_pr
 
 
 # ---------------------------------------------------------------------------
@@ -348,10 +409,9 @@ def test_bfs_cross_engine(spark):
 def test_graph_analytics_plans_no_nested_loop(spark):
     """All three operators must stay equi-join shaped: the triangle
     closing join keys on (least, greatest) expressions, every pagerank
-    join keys on a node id, and the star contraction's final-output plan
-    carries the roots anti-join (its per-iteration joins execute inside
-    the loop and are covered by the 1M-node chain stress) — a nested-loop
-    anywhere is a 10^12-scale regression."""
+    join keys on a node id, and the star contraction's final output reads
+    only the converged star forest (its per-round windows execute inside
+    the loop) — a nested-loop anywhere is a 10^12-scale regression."""
     from ie_spark.pipeline.canonicalize import connected_components_star
     rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
     df = _edges_df(spark, rows)
