@@ -73,6 +73,59 @@ def test_connected_components_small_graph(spark):
     assert comp["a"] == "a"
 
 
+def _min_label_ref(pairs):
+    """node -> min node of its component, by BFS over the undirected
+    graph (self-loops dropped, as the operator does)."""
+    adj = {}
+    for a, b in pairs:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        label[start] = start
+        frontier = [start]
+        while frontier:
+            nxt = []
+            for u in frontier:
+                for v in adj[u]:
+                    if v not in label:
+                        label[v] = start
+                        nxt.append(v)
+            frontier = nxt
+    return label
+
+
+def test_star_cc_equivalent_to_label_propagation(spark):
+    """Property check: alternating large/small-star CC produces the same
+    min-label components that label propagation converges to, on random
+    graphs and on a long chain (the worst case for propagation)."""
+    import random as _random
+
+    for seed in (0, 1, 2, 3):
+        r = _random.Random(seed)
+        n = r.randint(5, 28)
+        nodes = [f"n{i:02d}" for i in range(n)]
+        m = r.randint(3, 40)
+        pairs = {(r.choice(nodes), r.choice(nodes)) for _ in range(m)}
+        pairs = [(a, b) for a, b in pairs if a != b] or [("n00", "n01")]
+        edges = spark.createDataFrame(pairs, "src string, dst string")
+        got = {(x.node, x.component)
+               for x in connected_components_star(edges).collect()}
+        want = set(_min_label_ref(pairs).items())
+        assert got == want, \
+            f"seed={seed}: {sorted(got - want)[:5]} vs {sorted(want - got)[:5]}"
+
+    # explicit long chain (diameter = n-1)
+    chain = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(12)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    comp = {x.node: x.component
+            for x in connected_components_star(edges).collect()}
+    assert set(comp.values()) == {"c00"} and len(comp) == 13
+
+
 def test_ambiguous_aliases_never_percolate(spark):
     # scale guard: an alias stem naming two referents ('player' for both
     # Robbie and Serena) must NOT merge them — stem-level _AKA edges
