@@ -32,6 +32,7 @@ sums are computed in DECIMAL then cast) so value-hashes match bit-for-bit.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -43,51 +44,37 @@ from pyspark.sql.window import Window
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
-_PYFILES_SENT: set[str] = set()
-
-
-def _ensure_pyfiles(spark: SparkSession) -> None:
-    """Ship ie_spark to executors (addPyFile) so UDF closures resolve even
-    when the driver's cwd/PYTHONPATH doesn't include this repo."""
-    key = spark.sparkContext.applicationId
-    if key in _PYFILES_SENT:
-        return
-    import tempfile
-    import zipfile
-    zpath = os.path.join(tempfile.gettempdir(), "ie_spark_pyfiles.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        pkg = os.path.join(_REPO, "ie_spark")
-        for root, _, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zpath)
-    _PYFILES_SENT.add(key)
-
+from ie_spark.operators.partitioning import adaptive_fan_out  # noqa: E402
+from ie_spark.session import ship_package  # noqa: E402
 
 _TABLE_CACHE: dict = {}
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Session-scoped table handle memo: re-listing files and re-reading
-    parquet footers costs 0.3–1.2 s per spark.read.parquet even warm —
-    a real deployment catalogs table schemas once.  DataFrames are
-    immutable, so reusing the handle across queries is safe; keyed on
-    the session object itself so a restarted session re-reads."""
-    # bounded cache: only clear (race-safely) when it outgrows a small
-    # budget, so alternating live sessions don't thrash each other and a
-    # concurrent eviction can never KeyError a query mid-run
+def _memo(spark: SparkSession, key: tuple, build: Callable[[], DataFrame]):
+    """Session-scoped memo for table handles and materialized frames,
+    keyed on the live session object so a restarted session rebuilds.
+    DataFrames are immutable, so reusing one across queries is safe."""
+    # bounded: only evict (race-safely) other sessions' entries once the
+    # memo outgrows a small budget, so alternating live sessions don't
+    # thrash each other and a concurrent eviction can never KeyError a
+    # query mid-run
     if len(_TABLE_CACHE) > 64:
         for k in list(_TABLE_CACHE):
             if k[0] is not spark:
                 _TABLE_CACHE.pop(k, None)
-    key = (spark, sf_dir, name)
+    key = (spark, *key)
     df = _TABLE_CACHE.get(key)
     if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        _TABLE_CACHE[key] = df
+        df = _TABLE_CACHE[key] = build()
     return df
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Session-scoped table handle: re-listing files and re-reading
+    parquet footers costs 0.3–1.2 s per spark.read.parquet even warm —
+    a real deployment catalogs table schemas once."""
+    return _memo(spark, (sf_dir, name), lambda: spark.read.parquet(
+        os.path.join(sf_dir, f"{name}.parquet")))
 
 
 def _shingles(spark: SparkSession, sf_dir: str):
@@ -95,16 +82,10 @@ def _shingles(spark: SparkSession, sf_dir: str):
     documents table — ONE Arrow pass shared by doc_minhash_dedup (sh_h +
     bh) and doc_ngram_dups (sh_h only).  Shingling is the dominant shared
     cost of the dedup ladder; a session running both queries (the bench,
-    the driver's gate) pays it once.  Same lifecycle as _TABLE_CACHE:
-    keyed on the live session object, evicted alongside it."""
+    the driver's gate) pays it once."""
     from ie_spark.operators.dedup import shingle_frame
-    key = (spark, sf_dir, "__shingles__")
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        df = shingle_frame(_t(spark, sf_dir, "documents"),
-                           n=3, num_hashes=64, bands=16)
-        _TABLE_CACHE[key] = df
-    return df
+    return _memo(spark, (sf_dir, "__shingles__"), lambda: shingle_frame(
+        _t(spark, sf_dir, "documents"), n=3, num_hashes=64, bands=16))
 
 
 # Output-ordering policy (r06 optimization): declared queries return an
@@ -118,19 +99,6 @@ def _shingles(spark: SparkSession, sf_dir: str):
 # purely for display order is a scale-killer (guide §2.4: "an orderBy used
 # only to make output deterministic").  Semantic sorts (top-k orderBy+limit)
 # are kept.
-
-
-def _fan_out(df: DataFrame, *keys: str) -> DataFrame:
-    """Scale-adaptive scan fan-out (guide §2.5 'input skew: one huge
-    unsplittable file').  The testdata tables are single-row-group parquet
-    files, so a scan arrives as ONE partition and every downstream
-    operator — joins, windows, per-row expression work — serializes on one
-    core even under all-broadcast plans; at cluster scale this is a no-op.
-    Shared policy lives in operators.partitioning.adaptive_fan_out.
-    Measured (sf0.1, warm): q5 1.11→0.50 s, q3 0.70→0.49 s, doc_quality
-    0.64→0.30 s, events_sessionize 0.30→0.22 s."""
-    from ie_spark.operators.partitioning import adaptive_fan_out
-    return adaptive_fan_out(df, *keys)
 
 
 def _dec_sum(col, alias, scale=2):
@@ -150,26 +118,23 @@ _KG_CONVS = 120
 
 
 def _kg_transcripts(spark: SparkSession) -> DataFrame:
-    """Session-scoped transcript handle (same lifecycle/memo as
-    _TABLE_CACHE): the deterministic 120-conv corpus is generated on the
-    driver and arrow-shipped once per session instead of once per kg
-    query — 18 kg queries re-used it ~30× per correctness session."""
-    key = (spark, "__kg_transcripts__")
-    df = _TABLE_CACHE.get(key)
-    if df is None:
+    """Session-scoped transcript handle: the deterministic 120-conv corpus
+    is generated on the driver and arrow-shipped once per session instead
+    of once per kg query — 18 kg queries re-used it ~30× per correctness
+    session."""
+    def build():
         from ie_spark.data.synthetic import corpus_to_pandas
         from ie_spark.pipeline.extract import transcripts_from_pandas
-        _ensure_pyfiles(spark)
         tr, _, _ = corpus_to_pandas(n_convs=_KG_CONVS, seed=42)
-        df = transcripts_from_pandas(spark, tr)
-        _TABLE_CACHE[key] = df
-    return df
+        return transcripts_from_pandas(spark, tr)
+    return _memo(spark, ("__kg_transcripts__",), build)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-turn (subj, pred, obj) triple extraction via Arrow
     pandas UDFs over the transcript table (north rule headline)."""
     from ie_spark.pipeline.extract import extract_triples
+    ship_package(spark)
     return extract_triples(_kg_transcripts(spark))
 
 
@@ -215,29 +180,32 @@ def _q_kg_linked(spark, sf_dir):
 def _kg_extracted_once(spark):
     """Single-pass extraction for the multi-table kg queries: ONE scan +
     ONE MapInPandas (extract_all), materialized (localCheckpoint) so the
-    mentions/triples branches don't each re-run the UDF.  Session-scoped
-    (same memo discipline as _shingles): kg_nodes/kg_edges/
-    kg_edge_classes and the seven graph-analytics queries all start from
-    this pass, and without the memo each of them re-ran the extraction
-    UDF per query in a correctness session."""
-    key = (spark, "__kg_combined__")
-    combined = _TABLE_CACHE.get(key)
-    if combined is None:
-        from ie_spark.pipeline.extract import extract_all
-        combined = extract_all(_kg_transcripts(spark)).localCheckpoint()
-        _TABLE_CACHE[key] = combined
-    from ie_spark.pipeline.extract import split_combined
-    return split_combined(combined)
+    mentions/triples branches don't each re-run the UDF.  Session-scoped:
+    kg_nodes/kg_edges/kg_edge_classes and the seven graph-analytics
+    queries all start from this pass, and without the memo each of them
+    re-ran the extraction UDF per query in a correctness session."""
+    from ie_spark.pipeline.extract import extract_all, split_combined
+    return split_combined(_memo(
+        spark, ("__kg_combined__",),
+        lambda: extract_all(_kg_transcripts(spark)).localCheckpoint()))
+
+
+def _kg_labels(spark):
+    """(linked mentions, triples, component labels) over the single
+    extraction pass — the shared prefix of kg_nodes and kg_edges."""
+    from ie_spark.pipeline.canonicalize import (build_identity_edges,
+                                                connected_components_star)
+    from ie_spark.pipeline.linking import build_candidate_dict, link_mentions
+    mentions, triples = _kg_extracted_once(spark)
+    linked = link_mentions(mentions, build_candidate_dict(spark))
+    return linked, triples, connected_components_star(
+        build_identity_edges(linked, triples))
 
 
 def _q_kg_nodes(spark, sf_dir):
-    from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
-                                           link_mentions)
-    from ie_spark.pipeline.canonicalize import (
-        build_identity_edges, canonical_nodes, connected_components_star)
-    mentions, triples = _kg_extracted_once(spark)
-    linked = link_mentions(mentions, build_candidate_dict(spark))
-    labels = connected_components_star(build_identity_edges(linked, triples))
+    from ie_spark.pipeline.canonicalize import canonical_nodes
+    from ie_spark.pipeline.linking import kb_metadata
+    linked, _, labels = _kg_labels(spark)
     return canonical_nodes(labels, linked, kb=kb_metadata(spark))
 
 
@@ -246,37 +214,15 @@ def _q_kg_edges(spark, sf_dir):
     # the seven graph-analytics queries all consume this edge list; the
     # lazy checkpoint materializes the linking + connected-components
     # prefix once per session instead of once per query
-    key = (spark, "__kg_edges__")
-    memo = _TABLE_CACHE.get(key)
-    if memo is not None:
-        return memo
-    out = _kg_edges_build(spark, sf_dir).localCheckpoint(eager=False)
-    _TABLE_CACHE[key] = out
-    return out
+    return _memo(spark, ("__kg_edges__",), lambda: _kg_edges_build(
+        spark, sf_dir).localCheckpoint(eager=False))
 
 
 def _kg_edges_build(spark, sf_dir):
-    from ie_spark.pipeline.linking import build_candidate_dict, link_mentions
-    from ie_spark.pipeline.canonicalize import (
-        build_identity_edges, canonical_mention_map, connected_components_star)
-    mentions, triples = _kg_extracted_once(spark)
-    linked = link_mentions(mentions, build_candidate_dict(spark))
-    labels = connected_components_star(build_identity_edges(linked, triples))
-    # the stem→node map is KB-canonicalization-scoped (distinct LINKED
-    # entity stems, not the open vocabulary) — explicitly broadcast so a
-    # skewed-stem regression to sort-merge can't land silently
-    # (round-2 verdict #8; guarded by test_plans.py)
-    mmap = F.broadcast(canonical_mention_map(labels))
-    ev = triples.filter(~F.col("pred").isin("_AKA", "_POSS"))
-    return (ev
-            .join(mmap.withColumnRenamed("stem", "subj")
-                      .withColumnRenamed("node_id", "src"), "subj", "left")
-            .join(mmap.withColumnRenamed("stem", "obj")
-                      .withColumnRenamed("node_id", "dst"), "obj", "left")
-            .select(F.coalesce("src", F.concat(F.lit("M:"), "subj")).alias("src"),
-                    "pred",
-                    F.coalesce("dst", F.concat(F.lit("M:"), "obj")).alias("dst"),
-                    "conv_id", "turn_idx"))
+    from ie_spark.pipeline.canonicalize import canonical_edges
+    _, triples, labels = _kg_labels(spark)
+    return canonical_edges(triples, labels).select(
+        "src", "pred", "dst", "conv_id", "turn_idx")
 
 
 # ---------------------------------------------------------------------------
@@ -302,7 +248,7 @@ def _q3_top_orders(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     rev = (F.col("l_extendedprice").cast("decimal(18,6)")
            * (1 - F.col("l_discount").cast("decimal(18,6)")))
-    li = _fan_out(li, "l_orderkey")
+    li = adaptive_fan_out(li, "l_orderkey")
     return (li.join(o, li.l_orderkey == o.o_orderkey)
             .join(F.broadcast(c.filter(F.col("c_mktsegment") == "BUILDING")),
                   o.o_custkey == F.col("c_custkey"))
@@ -324,7 +270,7 @@ def _q5_nation_revenue(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     rev = (F.col("l_extendedprice").cast("decimal(18,6)")
            * (1 - F.col("l_discount").cast("decimal(18,6)")))
-    li = _fan_out(li, "l_orderkey")
+    li = adaptive_fan_out(li, "l_orderkey")
     return (li.join(o, li.l_orderkey == o.o_orderkey)
             .join(c, o.o_custkey == c.c_custkey)
             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -432,7 +378,7 @@ def _q_events_hourly(spark, sf_dir):
 def _q_events_sessionize(spark, sf_dir):
     """Sessionization: gap > 30 min starts a new session; count sessions and
     events per user (lag window + running sum)."""
-    ev = _fan_out(_t(spark, sf_dir, "events"), "user_id")
+    ev = adaptive_fan_out(_t(spark, sf_dir, "events"), "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ: timestampdiff is calendar arithmetic — timezone-
     # independent; MICROSECOND unit keeps sub-second gaps exact (SECOND
@@ -638,7 +584,6 @@ def _q_kg_conv_stats(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                    StructField, StructType)
-    _ensure_pyfiles(spark)
     tr = _kg_transcripts(spark)
     schema = StructType([
         StructField("conv_id", StringType()),
@@ -837,7 +782,7 @@ def _q_doc_line_dedup(spark, sf_dir):
 def _q_doc_quality(spark, sf_dir):
     from ie_spark.operators.textstats import (
         mean_word_len, punct_ratio, stopword_ratio, token_count)
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = adaptive_fan_out(_t(spark, sf_dir, "documents"), "doc_id")
     return d.select(
         "doc_id",
         token_count().alias("n_tokens"),
@@ -1069,9 +1014,8 @@ def _q_kg_components(spark, sf_dir):
     see BASELINE.md).  Oracled: a recursive transitive-closure CTE in
     DuckDB computing the same min-reachable-node label."""
     from ie_spark.pipeline.canonicalize import connected_components_star
-    comp = connected_components_star(
+    return connected_components_star(
         _q_kg_edges(spark, sf_dir).select("src", "dst"))
-    return comp
 
 
 def _q_kg_link_pred(spark, sf_dir):
@@ -1129,7 +1073,6 @@ def _q_media_features(spark, sf_dir):
     as VALUES — verifying the distributed Arrow path end-to-end."""
     from ie_spark.operators.multimodal import (
         extract_media_features, make_synthetic_media)
-    _ensure_pyfiles(spark)
     out = extract_media_features(make_synthetic_media(spark, n=48))
     return out.select("media_id", "kind", "n_bytes", "content_sha",
                       "feature_sha")
@@ -1221,8 +1164,18 @@ def _q_doc_clean_train(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _shipped(q: Callable[[SparkSession, str], DataFrame]):
+    """``q`` with the package shipped to the session's executors first,
+    so Python UDFs resolve ie_spark whatever the driver's cwd."""
+    @functools.wraps(q)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ship_package(spark)
+        return q(spark, sf_dir)
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    return {name: _shipped(q) for name, q in {
         # KG pipeline (north rule; pytest P/R gate is the strong check)
         "kg_triples": _q_kg_triples,
         "kg_mentions": _q_kg_mentions,
@@ -1319,7 +1272,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the WHOLE cleaning ladder, end-to-end (oracled: every stage
         #   recomputed independently in SQL)
         "doc_clean_train": _q_doc_clean_train,
-    }
+    }.items()}
 
 
 def _sql_lit(v) -> str:

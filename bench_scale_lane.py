@@ -12,7 +12,7 @@ read-only and never modified):
     quadratically harder than any real corpus growth);
   - embeddings: K×2000 seeded unit-ish vectors (dim 64, vec_id 0 kept).
 Tables are written repartitioned, so scans arrive multi-partition —
-exercising the `_fan_out` no-op branch — and with zstd parquet.
+exercising the `adaptive_fan_out` no-op branch — and with zstd parquet.
 
 Usage:
     python bench_scale_lane.py [K]          # default K=5

@@ -716,9 +716,7 @@ def transcripts_spark(spark, n_convs: int, seed: int = 42,
     regardless of partitioning — generation is seeded per conversation."""
     import pandas as _pd
     from ie_spark.pipeline.extract import TRANSCRIPT_SCHEMA
-    from ie_spark.session import ship_package
 
-    ship_package(spark)
     # one task per core, not two: conversations are uniform work units, so
     # a single wave of full tasks beats two waves of half tasks (measured
     # 1.95→1.68 s for the 199k-turn extraction pass at local[32]); callers

@@ -91,8 +91,6 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                 "feature_sha": fshas,
             })
 
-    from ie_spark.session import ship_package
-    ship_package(media.sparkSession)
     return (media.select("media_id", "kind", "payload")
             .mapInPandas(fn, schema=FEATURE_SCHEMA))
 
@@ -174,11 +172,11 @@ def make_synthetic_media(spark, n: int = 64) -> DataFrame:
     The Arrow path serializes the 48 rows on the driver into Arrow
     batches, so the source is a plain JVM scan (guide §6 'Arrow for
     driver transfers'; measured 1.15→0.39 s cold at sf0.1).  Row content
-    is unchanged."""
-    import pandas as pd
-    rows = synthetic_media_rows(n)
-    pdf = pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    is unchanged.  Object columns keep Python ints and None as they are,
+    so the frame also converts when Arrow is off (a float+NaN or nullable
+    Int32 column reaches the row path as floats, which IntegerType
+    rejects)."""
+    pdf = pd.DataFrame(synthetic_media_rows(n), dtype=object,
+                       columns=[f.name for f in MEDIA_SCHEMA.fields])
     pdf["payload"] = pdf["payload"].map(bytes)
-    for c in ("width", "height", "duration_ms"):
-        pdf[c] = pdf[c].astype("Int32")  # nullable ints, not float+NaN
     return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)

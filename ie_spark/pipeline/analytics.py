@@ -33,15 +33,11 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def degree_profile(edges: DataFrame, sort: bool = True,
-                   checkpoint: bool = True) -> DataFrame:
+def degree_profile(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     """edges(src, dst, ...) → one row per node with degree counts.
 
     Columns: node, out_degree, out_neighbors, in_degree, in_neighbors,
-    total_degree.  With ``sort`` (default) the output carries a
-    deterministic total order (degree desc, node asc) for cross-engine
-    comparison; pass ``sort=False`` when a downstream consumer doesn't
-    need it — the global sort is a full range-shuffle of the output.
+    total_degree.
     """
     # both endpoint aggregations consume the projection; a lazy local
     # checkpoint runs the upstream lineage once (line_dedup pattern —
@@ -66,7 +62,7 @@ def degree_profile(edges: DataFrame, sort: bool = True,
                    F.coalesce("in_neighbors", F.lit(0)).alias("in_neighbors"))
            .withColumn("total_degree",
                        F.col("out_degree") + F.col("in_degree")))
-    return out.orderBy(F.desc("total_degree"), F.asc("node")) if sort else out
+    return out
 
 
 def undirected_pairs(edges: DataFrame) -> DataFrame:
@@ -77,7 +73,7 @@ def undirected_pairs(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def triangle_counts(edges: DataFrame, sort: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """edges(src, dst, ...) → (node, n_triangles) over the undirected
     simple graph.
 
@@ -125,16 +121,14 @@ def triangle_counts(edges: DataFrame, sort: bool = True) -> DataFrame:
         und.select(F.col("u").alias("cu"), F.col("v").alias("cv")),
         (F.least("b", "c") == F.col("cu")) &
         (F.greatest("b", "c") == F.col("cv"))).select("a", "b", "c")
-    per_node = (tri.select(F.col("a").alias("node"))
-                .unionByName(tri.select(F.col("b").alias("node")))
-                .unionByName(tri.select(F.col("c").alias("node")))
-                .groupBy("node").agg(F.count("*").alias("n_triangles")))
-    return (per_node.orderBy(F.desc("n_triangles"), F.asc("node"))
-            if sort else per_node)
+    return (tri.select(F.col("a").alias("node"))
+            .unionByName(tri.select(F.col("b").alias("node")))
+            .unionByName(tri.select(F.col("c").alias("node")))
+            .groupBy("node").agg(F.count("*").alias("n_triangles")))
 
 
 def pagerank_mass(edges: DataFrame, iterations: int = 5,
-                  scale: int = 10 ** 9, sort: bool = True) -> DataFrame:
+                  scale: int = 10 ** 9) -> DataFrame:
     """edges(src, dst, ...) → (node, rank_mass): fixed-iteration PageRank
     in EXACT integer arithmetic, weighted by edge multiplicity (damping
     0.85, dangling mass dropped — the standard simplification).
@@ -193,13 +187,11 @@ def pagerank_mass(edges: DataFrame, iterations: int = 5,
                 .agg((F.lit(base).cast("long") +
                       F.expr("(85 * sum(share)) div 100")).alias("mass"))
                 .localCheckpoint(eager=False))
-    out = mass.select("node", F.col("mass").alias("rank_mass"))
-    return out.orderBy(F.desc("rank_mass"), F.asc("node")) if sort else out
+    return mass.select("node", F.col("mass").alias("rank_mass"))
 
 
 def link_prediction(edges: DataFrame, max_fanout: int = 1000,
-                    min_common: int = 2, sort: bool = True,
-                    checkpoint: bool = True) -> DataFrame:
+                    min_common: int = 2, checkpoint: bool = True) -> DataFrame:
     """edges(src, dst, ...) → (u, v, common_neighbors, jaccard_milli):
     common-neighbor link prediction over the undirected simple graph —
     the classic "entities that share context but are not yet connected"
@@ -249,22 +241,18 @@ def link_prediction(edges: DataFrame, max_fanout: int = 1000,
             .agg(F.count("*").alias("common_neighbors"))
             .filter(F.col("common_neighbors") >= min_common)
             .join(und, ["u", "v"], "left_anti"))
-    out = (cand
-           .join(deg.select(F.col("node").alias("u"),
-                            F.col("deg").alias("du")), "u")
-           .join(deg.select(F.col("node").alias("v"),
-                            F.col("deg").alias("dv")), "v")
-           .select("u", "v", "common_neighbors",
-                   F.expr("(common_neighbors * 1000) div "
-                          "(du + dv - common_neighbors)")
-                   .alias("jaccard_milli")))
-    return (out.orderBy(F.desc("common_neighbors"), F.desc("jaccard_milli"),
-                        F.asc("u"), F.asc("v"))
-            if sort else out)
+    return (cand
+            .join(deg.select(F.col("node").alias("u"),
+                             F.col("deg").alias("du")), "u")
+            .join(deg.select(F.col("node").alias("v"),
+                             F.col("deg").alias("dv")), "v")
+            .select("u", "v", "common_neighbors",
+                    F.expr("(common_neighbors * 1000) div "
+                           "(du + dv - common_neighbors)")
+                    .alias("jaccard_milli")))
 
 
-def bfs_distances(edges: DataFrame, max_depth: int = 4,
-                  sort: bool = True) -> DataFrame:
+def bfs_distances(edges: DataFrame, max_depth: int = 4) -> DataFrame:
     """edges(src, dst, ...) → (node, dist): breadth-first hop distance
     over the undirected graph from a deterministic seed (the minimum
     node id), capped at ``max_depth`` hops — the bounded-neighborhood
@@ -298,11 +286,10 @@ def bfs_distances(edges: DataFrame, max_depth: int = 4,
         dist = (dist.unionByName(nxt)
                 .groupBy("node").agg(F.min("dist").alias("dist"))
                 .localCheckpoint(eager=False))
-    return dist.orderBy("dist", "node") if sort else dist
+    return dist
 
 
-def two_hop_paths(edges: DataFrame, max_fanout: int = 1000,
-                  sort: bool = True) -> DataFrame:
+def two_hop_paths(edges: DataFrame, max_fanout: int = 1000) -> DataFrame:
     """edges(src, dst, ...) → (src, dst, n_mid) two-hop reachability.
 
     ``n_mid`` counts DISTINCT intermediate nodes connecting src to dst
@@ -311,8 +298,7 @@ def two_hop_paths(edges: DataFrame, max_fanout: int = 1000,
     distinct in- or out-neighbors are excluded — a hub cap that bounds
     the join fan-out at d_in·d_out ≤ max_fanout² per intermediate instead
     of letting one mega-node produce a quadratic pair explosion.  The
-    anti-join against the hub set is unhinted (see module docstring);
-    ``sort=False`` skips the global output sort.
+    anti-join against the hub set is unhinted (see module docstring).
     """
     # four branches consume the pair list (both hub-degree aggregations
     # and both join sides) — lazy local checkpoint = one distinct pass
@@ -329,12 +315,10 @@ def two_hop_paths(edges: DataFrame, max_fanout: int = 1000,
     a = (pairs.join(hub, pairs.dst == hub.node, "left_anti")
          .select(F.col("src").alias("a_src"), F.col("dst").alias("mid")))
     b = pairs.select(F.col("src").alias("mid"), F.col("dst").alias("b_dst"))
-    out = (a.join(b, "mid")
-           .filter(F.col("a_src") != F.col("b_dst"))
-           .groupBy(F.col("a_src").alias("src"), F.col("b_dst").alias("dst"))
-           .agg(F.countDistinct("mid").alias("n_mid")))
-    return (out.orderBy(F.desc("n_mid"), F.asc("src"), F.asc("dst"))
-            if sort else out)
+    return (a.join(b, "mid")
+            .filter(F.col("a_src") != F.col("b_dst"))
+            .groupBy(F.col("a_src").alias("src"), F.col("b_dst").alias("dst"))
+            .agg(F.countDistinct("mid").alias("n_mid")))
 
 
 def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
@@ -354,18 +338,17 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
 
     from ie_spark.pipeline.canonicalize import connected_components_star
 
+    # each runner looks its function up when it runs, so a caller that
+    # wraps a pass (a tracer patching the module attribute) sees it
     runners = {
-        "degree": lambda e: degree_profile(e, sort=False, checkpoint=False),
-        "two_hop": lambda e: two_hop_paths(e, max_fanout=max_fanout,
-                                           sort=False),
-        "triangles": lambda e: triangle_counts(e, sort=False),
-        "pagerank": lambda e: pagerank_mass(e, iterations=iterations,
-                                            sort=False),
+        "degree": lambda e: degree_profile(e, checkpoint=False),
+        "two_hop": lambda e: two_hop_paths(e, max_fanout=max_fanout),
+        "triangles": lambda e: triangle_counts(e),
+        "pagerank": lambda e: pagerank_mass(e, iterations=iterations),
         "components": lambda e: connected_components_star(
             e.select("src", "dst")),
-        "link_pred": lambda e: link_prediction(e, max_fanout=max_fanout,
-                                               sort=False),
-        "bfs": lambda e: bfs_distances(e, sort=False),
+        "link_pred": lambda e: link_prediction(e, max_fanout=max_fanout),
+        "bfs": lambda e: bfs_distances(e),
     }
     passes = list(runners) if passes is None else list(passes)
     unknown = [p for p in passes if p not in runners]

@@ -164,3 +164,22 @@ def canonical_mention_map(labels: DataFrame) -> DataFrame:
             .filter(F.col("node").startswith("M:"))
             .select(F.expr("substring(node, 3)").alias("stem"),
                     F.col("component").alias("node_id")))
+
+
+def canonical_edges(triples: DataFrame, labels: DataFrame) -> DataFrame:
+    """triples + component labels → edges(src, pred, dst, conv_id,
+    turn_idx, sent_idx, polarity): each endpoint stem is rewritten to its
+    node_id ('M:<stem>' when unlinked); _AKA/_POSS are not edges.  The
+    stem→node map holds only linked entity stems, so it is broadcast
+    explicitly — a skewed-stem regression to sort-merge can't land
+    silently (guarded by test_plans.py)."""
+    mmap = F.broadcast(canonical_mention_map(labels))
+    return (triples.filter(~F.col("pred").isin("_AKA", "_POSS"))
+            .join(mmap.withColumnRenamed("stem", "subj")
+                  .withColumnRenamed("node_id", "src"), "subj", "left")
+            .join(mmap.withColumnRenamed("stem", "obj")
+                  .withColumnRenamed("node_id", "dst"), "obj", "left")
+            .select(F.coalesce("src", F.concat(F.lit("M:"), "subj")).alias("src"),
+                    "pred",
+                    F.coalesce("dst", F.concat(F.lit("M:"), "obj")).alias("dst"),
+                    "conv_id", "turn_idx", "sent_idx", "polarity"))

@@ -26,16 +26,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
+from ie_spark.extraction.extractor import (dependency_rows,
+                                           extract_constituents,
+                                           verbnet_tree, verbnet_view)
 from ie_spark.extraction.pandas_api import extract_batch
+from ie_spark.textproc.preprocess import split_sentences
 
 TRANSCRIPT_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -109,10 +111,7 @@ def _triples_to_combined(t: pd.DataFrame) -> pd.DataFrame:
 
 
 def _select_text(transcripts: DataFrame) -> DataFrame:
-    # ship the package to executors (UDF closures import ie_spark) and
     # prune columns before the UDF → parquet scan reads 3 columns only
-    from ie_spark.session import ship_package
-    ship_package(transcripts.sparkSession)
     return transcripts.select("conv_id", "turn_idx", "text")
 
 
@@ -136,40 +135,53 @@ def extract_mentions(transcripts: DataFrame) -> DataFrame:
     return _select_text(transcripts).mapInPandas(fn, schema=MENTION_SCHEMA)
 
 
-CONSTITUENT_SCHEMA = StructType([
-    StructField("conv_id", StringType()),
-    StructField("turn_idx", IntegerType()),
-    StructField("sent_idx", IntegerType()),
-    StructField("vntype", StringType()),
-    StructField("start", IntegerType()),
-    StructField("end", IntegerType()),
-    StructField("adjunct", BooleanType()),
-    StructField("surface", StringType()),
-])
+_SENT_KEY = "conv_id string, turn_idx int, sent_idx int, "
+
+
+def _sentence_rows(pdf: pd.DataFrame, fn, cols: str) -> pd.DataFrame:
+    """The batch body of every per-sentence surface: split each turn into
+    sentences and emit ``(conv_id, turn_idx, sent_idx, *row)`` for each
+    ``row`` of ``fn(sentence)``; ``cols`` is the DDL of the row columns.
+
+    Dead letters: a sentence whose ``fn`` raises yields one row with
+    ``_error:<ExcName>`` in the first string column and NULL elsewhere,
+    so one malformed sentence never aborts the job."""
+    names, types = zip(*(c.split() for c in cols.split(",")))
+    at = types.index("string")
+    rows = []
+    for conv_id, turn_idx, text in zip(
+            pdf["conv_id"].values, pdf["turn_idx"].values,
+            pdf["text"].values):
+        for si, sent in enumerate(split_sentences(text or "")):
+            key = (conv_id, int(turn_idx), si)
+            try:
+                out = [key + tuple(r) for r in fn(sent)]
+            except Exception as e:  # noqa: BLE001 — row isolation
+                err = [None] * len(names)
+                err[at] = f"_error:{type(e).__name__}"
+                out = [key + tuple(err)]
+            rows.extend(out)
+    return pd.DataFrame(rows, columns=["conv_id", "turn_idx", "sent_idx",
+                                       *names])
+
+
+def _per_sentence_frame(transcripts: DataFrame, fn, cols: str) -> DataFrame:
+    """transcripts → one Arrow mapInPandas pass of ``_sentence_rows``
+    (shuffle-free, like every extraction surface)."""
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _sentence_rows(pdf, fn, cols)
+
+    return _select_text(transcripts).mapInPandas(gen, schema=_SENT_KEY + cols)
 
 
 def extract_constituents_df(transcripts: DataFrame) -> DataFrame:
     """transcripts → constituent phrase table (NP/VP/S_INF/ADJP/ADVP/PP
     spans with adjunct marking — the reference's constituent output,
     core/sentence.py:218-321 refined by ccg.py:783-989)."""
-    from ie_spark.extraction.extractor import extract_constituents
-    from ie_spark.textproc.preprocess import split_sentences
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"].values, pdf["turn_idx"].values,
-                    pdf["text"].values):
-                for si, sent in enumerate(split_sentences(text or "")):
-                    for (t, s, e, adj, surf) in extract_constituents(sent):
-                        rows.append((conv_id, int(turn_idx), si,
-                                     t, s, e, adj, surf))
-            yield pd.DataFrame(rows, columns=[
-                "conv_id", "turn_idx", "sent_idx",
-                "vntype", "start", "end", "adjunct", "surface"])
-
-    return _select_text(transcripts).mapInPandas(fn, schema=CONSTITUENT_SCHEMA)
+    return _per_sentence_frame(
+        transcripts, extract_constituents,
+        "vntype string, start int, end int, adjunct boolean, surface string")
 
 
 def extract_vn_view_df(transcripts: DataFrame) -> DataFrame:
@@ -177,24 +189,13 @@ def extract_vn_view_df(transcripts: DataFrame) -> DataFrame:
     (``get_verbnet_sentence()``, semantics/ccg.py — reference C11): one
     row per phrase, PP rows carrying only their preposition, attributive
     adjuncts folded into their phrase (see extractor.verbnet_view)."""
-    from ie_spark.extraction.extractor import verbnet_view
-    from ie_spark.textproc.preprocess import split_sentences
+    return _per_sentence_frame(transcripts, verbnet_view,
+                               "vntype string, surface string")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"].values, pdf["turn_idx"].values,
-                    pdf["text"].values):
-                for si, sent in enumerate(split_sentences(text or "")):
-                    for (t, surf) in verbnet_view(sent):
-                        rows.append((conv_id, int(turn_idx), si, t, surf))
-            yield pd.DataFrame(rows, columns=[
-                "conv_id", "turn_idx", "sent_idx", "vntype", "surface"])
 
-    return _select_text(transcripts).mapInPandas(
-        fn, schema=("conv_id string, turn_idx int, sent_idx int, "
-                    "vntype string, surface string"))
+def _tree_row(sent: str) -> list[tuple]:
+    t = verbnet_tree(sent)
+    return [(repr(t) if t is not None else None,)]
 
 
 def extract_vn_trees_df(transcripts: DataFrame) -> DataFrame:
@@ -202,32 +203,12 @@ def extract_vn_trees_df(transcripts: DataFrame) -> DataFrame:
     is the repr of the reference-style nested constituent tree over the
     VerbNet-view node indices (``get_constituent_tree()``,
     core/sentence.py; see extractor.verbnet_tree)."""
-    from ie_spark.extraction.extractor import verbnet_tree
-    from ie_spark.textproc.preprocess import split_sentences
+    return _per_sentence_frame(transcripts, _tree_row, "tree string")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"].values, pdf["turn_idx"].values,
-                    pdf["text"].values):
-                for si, sent in enumerate(split_sentences(text or "")):
-                    try:
-                        t = verbnet_tree(sent)
-                    except Exception as e:  # noqa: BLE001 — row isolation
-                        # dead-letter semantics as everywhere else: one
-                        # malformed sentence must never abort the job
-                        rows.append((conv_id, int(turn_idx), si,
-                                     f"_error:{type(e).__name__}"))
-                        continue
-                    rows.append((conv_id, int(turn_idx), si,
-                                 repr(t) if t is not None else None))
-            yield pd.DataFrame(rows, columns=[
-                "conv_id", "turn_idx", "sent_idx", "tree"])
 
-    return _select_text(transcripts).mapInPandas(
-        fn, schema=("conv_id string, turn_idx int, sent_idx int, "
-                    "tree string"))
+def _dependency_rows(sent: str) -> list[tuple]:
+    toks, heads = dependency_rows(sent)
+    return [(ti, tok, int(h)) for ti, (tok, h) in enumerate(zip(toks, heads))]
 
 
 def extract_dependencies_df(transcripts: DataFrame) -> DataFrame:
@@ -235,34 +216,9 @@ def extract_dependencies_df(transcripts: DataFrame) -> DataFrame:
     word-level dependency rows — the reference's per-lexeme ``.head``
     output (``get_dependency_tree``, core/sentence.py:439; head
     conventions verified against test/exec_test.py token assertions).
-    The root token has head == tok_idx.  Same single Arrow pass / zero
-    exchanges as the other extraction surfaces."""
-    from ie_spark.extraction.extractor import dependency_rows
-    from ie_spark.textproc.preprocess import split_sentences
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"].values, pdf["turn_idx"].values,
-                    pdf["text"].values):
-                for si, sent in enumerate(split_sentences(text or "")):
-                    try:
-                        toks, heads = dependency_rows(sent)
-                    except Exception:  # noqa: BLE001 — row isolation
-                        rows.append((conv_id, int(turn_idx), si,
-                                     -1, "_error", -1))
-                        continue
-                    for ti, (tok, h) in enumerate(zip(toks, heads)):
-                        rows.append((conv_id, int(turn_idx), si,
-                                     ti, tok, int(h)))
-            yield pd.DataFrame(rows, columns=[
-                "conv_id", "turn_idx", "sent_idx", "tok_idx", "token",
-                "head"])
-
-    return _select_text(transcripts).mapInPandas(
-        fn, schema=("conv_id string, turn_idx int, sent_idx int, "
-                    "tok_idx int, token string, head int"))
+    The root token has head == tok_idx."""
+    return _per_sentence_frame(transcripts, _dependency_rows,
+                               "tok_idx int, token string, head int")
 
 
 def extract_all(transcripts: DataFrame) -> DataFrame:

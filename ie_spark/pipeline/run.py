@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ie_spark.pipeline.canonicalize import (
     build_identity_edges,
-    canonical_mention_map,
+    canonical_edges,
     canonical_nodes,
     connected_components_star as connected_components,
 )
@@ -112,20 +112,8 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     nodes = canonical_nodes(labels, linked, kb=kb_metadata(spark))
     nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
 
-    # 4. edge materialization with canonical endpoints; the stem→node map
-    # is KB-canonicalization-scoped (distinct linked entity stems), so
-    # broadcast explicitly rather than relying on AQE (verdict #8)
-    mmap = F.broadcast(canonical_mention_map(labels))
-    ev = triples.filter(~F.col("pred").isin("_AKA", "_POSS"))
-    edges = (ev
-             .join(mmap.withColumnRenamed("stem", "subj")
-                   .withColumnRenamed("node_id", "src"), "subj", "left")
-             .join(mmap.withColumnRenamed("stem", "obj")
-                   .withColumnRenamed("node_id", "dst"), "obj", "left")
-             .select(F.coalesce("src", F.concat(F.lit("M:"), "subj")).alias("src"),
-                     "pred",
-                     F.coalesce("dst", F.concat(F.lit("M:"), "obj")).alias("dst"),
-                     "conv_id", "turn_idx", "sent_idx", "polarity"))
+    # 4. edge materialization with canonical endpoints
+    edges = canonical_edges(triples, labels)
     merge_upsert(spark, edges, os.path.join(out_dir, "edges"),
                  keys=["src", "pred", "dst", "conv_id", "turn_idx",
                        "sent_idx", "polarity"])

@@ -159,8 +159,10 @@ def ship_package(spark: SparkSession) -> None:
 
     Required whenever a pandas-UDF closure references ie_spark code and the
     driver's cwd/PYTHONPATH isn't guaranteed to propagate to Python workers
-    (spark-submit without --py-files, notebooks, embedding hosts).  No-op
-    after the first call per SparkContext."""
+    (spark-submit without --py-files, notebooks, embedding hosts).
+    ``get_spark`` calls it; a caller that builds its own session calls it
+    once after ``getOrCreate()``.  No-op after the first call per
+    SparkContext."""
     key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
@@ -192,6 +194,7 @@ def get_spark(app_name: str = "ie_spark",
       input split size.
     - shuffle partitions default to 2× cores locally; on a real cluster set
       it (or rely on AQE coalescing from a high initial number).
+    - the ie_spark package is shipped to the executors (``ship_package``).
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") \
         or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
@@ -221,6 +224,7 @@ def get_spark(app_name: str = "ie_spark",
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    ship_package(spark)
     if os.environ.get("SPARK_GRAFT_NO_WARMUP") != "1":
         warm_session(spark)
     return spark

@@ -42,6 +42,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from ie_spark.pipeline.docs import clean_documents
+    from ie_spark.session import ship_package
+    ship_package(spark)
 
     t0 = time.time()
     docs = spark.read.parquet(os.path.join(args.inp, "documents.parquet"))

@@ -50,6 +50,8 @@ def main() -> None:
 
     from ie_spark.data.synthetic import transcripts_spark
     from ie_spark.pipeline.extract import extract_triples
+    from ie_spark.session import ship_package
+    ship_package(spark)
 
     tdf = transcripts_spark(spark, args.convs, seed=args.seed,
                             partitions=cores * 3).cache()

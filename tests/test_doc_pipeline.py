@@ -106,11 +106,15 @@ def test_cli_pack_stage(spark, tmp_path):
 
     out = str(tmp_path / "cleaned")
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="2g")
+    # absolute script path from a foreign cwd: the Python workers must
+    # get ie_spark from the shipped package, not from the cwd
+    script = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "doc_pipeline.py")
     proc = subprocess.run(
-        [sys.executable, "scripts/doc_pipeline.py", "--in", src,
+        [sys.executable, script, "--in", src,
          "--out", out, "--pack-capacity", "16", "--pack-shards", "2"],
         capture_output=True, text=True, timeout=300, env=env,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        cwd=str(tmp_path))
     assert proc.returncode == 0, proc.stderr[-2000:]
     stats = json.loads(proc.stdout.strip().splitlines()[-1])
     assert stats["accounted"] is True

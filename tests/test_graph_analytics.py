@@ -415,11 +415,11 @@ def test_graph_analytics_plans_no_nested_loop(spark):
     from ie_spark.pipeline.canonicalize import connected_components_star
     rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
     df = _edges_df(spark, rows)
-    for out in (triangle_counts(df, sort=False),
-                pagerank_mass(df, iterations=2, sort=False),
+    for out in (triangle_counts(df),
+                pagerank_mass(df, iterations=2),
                 connected_components_star(df.select("src", "dst")),
-                link_prediction(df, min_common=1, sort=False),
-                bfs_distances(df, max_depth=2, sort=False)):
+                link_prediction(df, min_common=1),
+                bfs_distances(df, max_depth=2)):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -431,9 +431,9 @@ def test_pagerank_plan_size_constant_in_iterations(spark):
     (without truncation it grows geometrically)."""
     rows = [("a", "b"), ("b", "c"), ("c", "a")]
     df = _edges_df(spark, rows)
-    p3 = len(pagerank_mass(df, iterations=3, sort=False)
+    p3 = len(pagerank_mass(df, iterations=3)
              ._jdf.queryExecution().executedPlan().toString())
-    p6 = len(pagerank_mass(df, iterations=6, sort=False)
+    p6 = len(pagerank_mass(df, iterations=6)
              ._jdf.queryExecution().executedPlan().toString())
     assert p6 <= 2 * p3, (p3, p6)
 

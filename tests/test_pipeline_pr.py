@@ -98,3 +98,59 @@ def test_constituents_match_template_goldens(spark, corpus, transcripts):
             .sort_values(C).reset_index(drop=True)
     assert len(a) == len(b)
     assert a.equals(b)
+
+
+@pytest.mark.parametrize("surface", ["constituents", "vn_view", "vn_trees",
+                                     "dependencies"])
+def test_per_sentence_dead_letter(spark, surface):
+    """Every per-sentence surface shares one batch body and one
+    dead-letter rule: a sentence whose fn raises yields exactly one row,
+    '_error:<ExcName>' in the surface's first string column and NULL in
+    its other columns, while its neighbours keep their normal rows.  The
+    body is driven in-process (driver-side patches can't reach Spark's
+    Python workers), then once through Spark so the NULLs survive the
+    Arrow trip."""
+    from ie_spark.pipeline import extract as ex
+    surface_df, fn = {
+        "constituents": (ex.extract_constituents_df, ex.extract_constituents),
+        "vn_view": (ex.extract_vn_view_df, ex.verbnet_view),
+        "vn_trees": (ex.extract_vn_trees_df, ex._tree_row),
+        "dependencies": (ex.extract_dependencies_df, ex._dependency_rows),
+    }[surface]
+    pdf = pd.DataFrame(
+        [("c1", 0, "The boy waited. Boom went the girl. The girl smiled."),
+         ("c1", 1, "The dog ran.")],
+        columns=["conv_id", "turn_idx", "text"])
+    text = spark.createDataFrame(pdf, "conv_id string, turn_idx int, "
+                                      "text string")
+    fields = surface_df(text).schema.fields[3:]
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
+    first = next(i for i, f in enumerate(fields)
+                 if f.dataType.simpleString() == "string")
+
+    def bomb(sent):
+        if sent.startswith("Boom"):
+            raise ValueError("synthetic failure")
+        return fn(sent)
+
+    key = ["conv_id", "turn_idx", "sent_idx"]
+    clean = ex._sentence_rows(pdf, fn, cols)
+    got = ex._sentence_rows(pdf, bomb, cols)
+    assert list(got.columns) == key + [f.name for f in fields]
+    is_bad = (got["turn_idx"] == 0) & (got["sent_idx"] == 1)
+    want = [None] * len(fields)
+    want[first] = "_error:ValueError"
+    assert is_bad.sum() == 1
+    assert [None if pd.isna(v) else v
+            for v in got[is_bad].iloc[0][3:]] == want
+    # the neighbours, in the same turn and in the next one, are untouched
+    keep = clean[~((clean["turn_idx"] == 0) & (clean["sent_idx"] == 1))]
+    assert {(0, 0), (0, 2), (1, 0)} <= set(
+        zip(keep["turn_idx"], keep["sent_idx"]))
+    assert (list(got[~is_bad].itertuples(index=False))
+            == list(keep.itertuples(index=False)))
+
+    rows = ex._per_sentence_frame(text, bomb, cols).collect()
+    err = [r for r in rows if r["turn_idx"] == 0 and r["sent_idx"] == 1]
+    assert len(rows) == len(got) and len(err) == 1
+    assert list(err[0])[3:] == want

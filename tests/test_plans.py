@@ -318,20 +318,20 @@ def test_partition_pruning_static_and_dynamic(spark, tmp_path, sf_dir):
 
 
 def test_fan_out_noops_on_wide_input(spark, tmp_path):
-    """_fan_out exists for single-row-group scans; on an input that is
-    already at/above the session parallelism it must add NO exchange
+    """adaptive_fan_out exists for single-row-group scans; on an input
+    that is already at the session parallelism it must add NO exchange
     (the cluster-scale branch — guide §2.5)."""
     from pyspark.sql import functions as F
-    import __spark_entry__ as em
-    wide = spark.range(0, 1000, 1, 8).select(
+    from ie_spark.operators.partitioning import adaptive_fan_out
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 1000, 1, par).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    assert wide.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
-    out = em._fan_out(wide, "k")
+    out = adaptive_fan_out(wide, "k")
     assert out is wide  # no repartition node added
 
     narrow = spark.range(0, 1000, 1, 1).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    out2 = em._fan_out(narrow, "k")
+    out2 = adaptive_fan_out(narrow, "k")
     assert out2 is not narrow
     assert out2.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism

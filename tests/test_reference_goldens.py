@@ -1178,8 +1178,6 @@ def test_ccgbank_parse_derivations_df(spark):
     """Distributed derivation ingestion: good rows parse byte-exact, a
     malformed row dead-letters instead of failing the task."""
     from ie_spark.extraction.ccgbank import parse_derivations
-    from ie_spark.session import ship_package
-    ship_package(spark)
     good = CCGBANK_GOLDENS[0]
     df = spark.createDataFrame(
         [("a", good["auto"]), ("b", "(<T S 0 2> broken"), ("c", None)],
