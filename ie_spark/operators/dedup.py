@@ -1,10 +1,13 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All operators are expressed with native DataFrame ops (explode / groupBy /
-join) so Catalyst plans them; the only Python is one Arrow pandas UDF for
-SimHash bit-twiddling (numpy-vectorized).  Each operator is designed so the
-shuffle key is the *blocking* key (shingle band / signature), never the raw
-document — at 100 TB the widest thing shuffled is (key, doc_id) pairs.
+Operators are native DataFrame ops (explode / groupBy / join) so Catalyst
+plans them.  The one Python pass is the Arrow ``mapInPandas`` in
+``_minhash_arrow_frame``: hashed word n-grams, MinHash signature and LSH
+band hashes in numpy, materialized once by ``shingle_frame`` and shared by
+the MinHash and n-gram Jaccard pipelines.  Each operator is designed so
+the shuffle key is the *blocking* key (shingle hash / band hash / SimHash
+chunk), never the raw document — at 100 TB the widest thing shuffled is
+(key, doc_id) pairs.
 
 The reference's only dedup is a content-hash check before archiving
 (marbles/aws/__init__.py:115-136 ``check_hash_exists``); exact_dedup_ids is
@@ -13,8 +16,6 @@ its distributed equivalent, the rest are the standard corpus-dedup ladder
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -149,80 +150,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.3,
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(docs: DataFrame, num_hashes: int = 64,
-                      shingle_col: str = "shingles",
-                      id_col: str = "doc_id",
-                      out_col: str = "signature",
-                      pre_hashed: bool = False) -> DataFrame:
-    """k independent min-hashes per doc: sig[s] = min over shingles of
-    xxhash64(xxhash64(shingle), seed_s).
-
-    Implementation: explode shingles, hash each *string* once to a long
-    (or take ``pre_hashed`` longs as-is), derive the k variants by
-    re-hashing the long (cheap), and take the k mins in ONE codegen'd hash
-    aggregation with map-side combine — the only shuffled payload is
-    (doc_id, k partial mins).  Measured (sf0.1, local[32]): this beats the
-    shuffle-free per-row formulation (k × array_min(transform(...))) by
-    ~2× — interpreted HOF lambdas cost more than the narrow exchange — and
-    avoids the empty-bin hot-bucket pathology of one-permutation hashing.
-    A lo/hi multiply-add universal family was measured 1.2× faster still,
-    but missed a true J≥0.8 pair's banding that the exact-Jaccard oracle
-    caught (477 vs 476 survivors at sf0.01) — xxhash64 slot derivation
-    stays."""
-    if pre_hashed:
-        ex = docs.select(id_col, F.explode(shingle_col).alias("_h"))
-    else:
-        ex = (docs.select(id_col, F.explode(shingle_col).alias("_g"))
-              .withColumn("_h", F.xxhash64("_g")))
-    aggs = [F.min(F.xxhash64(F.col("_h"), F.lit(s))).alias(f"_m{s}")
-            for s in range(num_hashes)]
-    sig = (ex.groupBy(id_col).agg(*aggs)
-           .select(id_col,
-                   F.array(*[F.col(f"_m{s}") for s in range(num_hashes)])
-                   .alias(out_col)))
-    return docs.select(id_col, shingle_col).join(sig, id_col, "left")
-
-
-def lsh_candidate_pairs(signed: DataFrame, bands: int = 16,
-                        sig_len: int = 64, id_col: str = "doc_id",
-                        sig_col: str = "signature",
-                        max_bucket: int | None = None) -> DataFrame:
-    """Band the signature, hash each band, self-join on (band, hash) →
-    candidate pairs (a < b).  The shuffle key is the band hash, so identical
-    bands co-locate; hot bands (boilerplate) are bounded by banding width.
-
-    ``max_bucket`` drops band buckets holding more than that many docs
-    before the self-join (a 10^6-doc boilerplate bucket is a 10^12-pair
-    quadratic block).  Docs in an oversized bucket almost always share
-    other, smaller buckets (16 bands); the exact-Jaccard verify stage is
-    unaffected."""
-    rows_per_band = sig_len // bands
-    banded = signed.select(
-        id_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(F.concat_ws(
-                         ",", *[F.coalesce(
-                             F.element_at(sig_col, b * rows_per_band + r + 1)
-                             .cast("string"), F.lit("∅"))
-                                for r in range(rows_per_band)])).alias("bh"))
-            for b in range(bands)
-        ])).alias("e"),
-    ).select(id_col, "e.band", "e.bh")
-    if max_bucket is not None:
-        hot = (banded.groupBy("band", "bh").agg(F.count("*").alias("n"))
-               .filter(F.col("n") > max_bucket).select("band", "bh"))
-        banded = banded.join(F.broadcast(hot), ["band", "bh"], "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (a.join(b, [F.col(f"a.band") == F.col("b.band"),
-                       F.col("a.bh") == F.col("b.bh"),
-                       F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
-            .distinct())
-
-
 def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
                    threshold: float = 0.8, id_col: str = "doc_id",
                    shingle_col: str = "shingles") -> DataFrame:
@@ -254,19 +181,19 @@ def _splitmix64(x):
 def _minhash_arrow_frame(docs: DataFrame, n: int, num_hashes: int,
                          bands: int, id_col: str, text_col: str) -> DataFrame:
     """ONE Arrow ``mapInPandas`` pass → (id, sh_h array<long>,
-    bh array<long>[bands]): hashed distinct word n-grams, minhash
+    bh array<long>[bands]): hashed distinct word n-grams, MinHash
     signature, and per-band bucket hashes, all computed batch-vectorized
-    in numpy.
+    in numpy.  ``bands=0`` yields shingles only (empty ``bh``).
 
-    Why not the expression pipeline (kept above for its tests): the HOF
-    shingle chain + 64 min() aggregates + 16 band-hash structs are three
-    separate Catalyst plan shapes whose driver-side analysis/compile cost
-    ~6 s per session — over half the cold wall at sf0.1 (round-3 verdict
-    perf item).  The Arrow pass is one trivial plan; the numpy math is
-    deterministic (pandas siphash base + splitmix64 slot derivation — a
-    measurably STRONG family; the exact-Jaccard driver oracle gates its
-    banding recall).  Scale shape is unchanged: narrow output, shuffle
-    keys are band hashes, Python cost is Arrow-batched."""
+    One trivial plan instead of an expression pipeline (HOF shingle
+    chain + 64 min() aggregates + 16 band-hash structs), whose three plan
+    shapes cost ~6 s of plan analysis/compile per Spark session at sf0.1.
+    The numpy math is deterministic (pandas siphash base + splitmix64
+    slot derivation — a measurably STRONG family; the exact-Jaccard
+    DuckDB oracle of ``doc_minhash_dedup`` gates its banding recall).
+    Scale shape: narrow output, shuffle keys are band hashes, Python cost
+    is Arrow-batched.  A small input that arrives as one or a few file
+    splits is fanned out by ``partitioning.adaptive_fan_out``."""
     import numpy as np
     import pandas as pd
 
@@ -333,29 +260,8 @@ def _minhash_arrow_frame(docs: DataFrame, n: int, num_hashes: int,
             yield pd.DataFrame({id_col: ids, "sh_h": sh_col,
                                 "bh": bh_col})
 
-    # a small input often arrives as ONE (or few) file splits — fan the
-    # Arrow pass out (no-op at scale: a large input is already
-    # partitioned).  Fan WIDTH scales with input bytes (~2 MB of text
-    # per task, floor max(8, cores/4), cap cores): per-doc shingling is
-    # microseconds, so a tiny corpus is dispatch-bound and a narrow fan
-    # that matches the checkpoint width below removes the
-    # down-repartition stage outright (measured sf0.1: frame build
-    # 0.85→0.48 s warm, 1.75→0.76 s cold), while a few hundred MB
-    # arriving as one or a handful of splits is compute-bound and still
-    # fans to the full core count (review: a count-only policy left a
-    # 4–15-partition compute-bound input under-parallelized).
-    src = docs.select(id_col, text_col)
-    sc = docs.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    if src.rdd.getNumPartitions() < max(2, cores // 2):
-        try:
-            from urllib.parse import urlparse
-            nbytes = sum(os.path.getsize(urlparse(f).path)
-                         for f in docs.inputFiles())
-        except Exception:  # non-file-backed input — assume tiny
-            nbytes = 0
-        fan = min(cores, max(8, cores // 4, nbytes // (2 << 20)))
-        src = src.repartition(int(fan))
+    from ie_spark.operators.partitioning import adaptive_fan_out
+    src = adaptive_fan_out(docs.select(id_col, text_col))
     return src.mapInPandas(gen, schema=schema)
 
 
@@ -371,14 +277,15 @@ def shingle_frame(docs: DataFrame, n: int = 3, num_hashes: int = 64,
     — shingling the corpus is the dominant shared cost, and localCheckpoint
     pins it to cluster storage, not the driver.
 
-    Partitioning: the Arrow pass fans out adaptively (bytes-scaled,
-    floor max(8, cores/4) — see _minhash_arrow_frame), but the
-    CHECKPOINTED frame is narrow (three columns of hashes) and every
-    downstream stage launches one task per checkpoint partition — at small corpus sizes task overhead dominated the dedup
-    queries' wall (measured 6–7.6 s → ~3 s at sf0.1).  So the frame is
-    shuffled down to the source's own byte-sized partitioning (floor 8)
-    before checkpointing; at scale the source partitioning exceeds the
-    fan-out and both repartitions are no-ops."""
+    Partitioning: the Arrow pass fans out by the one scan policy
+    (``partitioning.adaptive_fan_out``), but the CHECKPOINTED frame is
+    narrow (three columns of hashes) and every downstream stage launches
+    one task per checkpoint partition — at small corpus sizes task
+    overhead dominated the dedup queries' wall (measured 6–7.6 s → ~3 s
+    at sf0.1).  So a frame fanned past twice the source's own partition
+    count (floor 8) is shuffled back down to it before checkpointing; at
+    scale the source partitioning exceeds the fan-out and both
+    repartitions are no-ops."""
     frame = _minhash_arrow_frame(docs, n=n, num_hashes=num_hashes,
                                  bands=bands, id_col=id_col,
                                  text_col=text_col)
@@ -420,16 +327,21 @@ def minhash_lsh_dedup(docs: DataFrame, n: int = 3, num_hashes: int = 64,
                       id_col: str = "doc_id", text_col: str = "text",
                       max_bucket: int | None = None,
                       base: DataFrame | None = None) -> DataFrame:
-    """Full near-dup pipeline → surviving ids (keep min id per dup set).
+    """Full near-dup pipeline → surviving ids: the minimum id of each
+    connected component of the verified near-dup graph, so a chain
+    a–b–c whose ends miss the threshold still collapses to one survivor
+    (the exact transitive closure the DuckDB oracle computes).
 
-    shingle+minhash+band (one Arrow pass) → bucket-join → exact-Jaccard
-    verify → union-find collapse (duplicate sets are tiny; min-id via
-    iterative join is one extra shuffle).  ``base`` optionally supplies
-    the materialized ``shingle_frame`` so it can be shared across the
-    dedup ladder."""
-    # ONE materialized narrow frame feeds the band join and the verify —
-    # the Arrow pass replaces three expression-heavy plan shapes whose
-    # compile dominated the cold wall (see _minhash_arrow_frame)
+    shingle+minhash+band (one Arrow pass, ``shingle_frame``) →
+    band-bucket self-join → exact-Jaccard verify →
+    ``connected_components_star`` over the verified pairs.  ``base``
+    optionally supplies the materialized ``shingle_frame`` so it can be
+    shared across the dedup ladder.
+
+    ``max_bucket`` drops band buckets holding more than that many docs
+    before the self-join (a 10^6-doc boilerplate bucket is a 10^12-pair
+    quadratic block).  Docs in an oversized bucket almost always share
+    other, smaller buckets (16 bands); the verify stage is unaffected."""
     if base is None:
         base = shingle_frame(docs, n=n, num_hashes=num_hashes, bands=bands,
                              id_col=id_col, text_col=text_col)
@@ -450,24 +362,11 @@ def minhash_lsh_dedup(docs: DataFrame, n: int = 3, num_hashes: int = 64,
              .distinct())
     dups = jaccard_verify(cands, base, threshold=threshold, id_col=id_col,
                           shingle_col="sh_h")
-    # materialize the (tiny) verified pair set once — the collapse loop
-    # below references it repeatedly and must not re-run the LSH pipeline
-    dups = dups.localCheckpoint()
-    # collapse duplicate pairs: min id per component. Near-dup sets are
-    # cliques under LSH+verify in practice; two propagation rounds cover
-    # chains a-b-c where (a,c) was missed.
-    root = dups.select(F.col("id_b").alias("victim"),
-                       F.col("id_a").alias("keeper"))
-    for _ in range(2):
-        root = (root.alias("r")
-                .join(root.select(F.col("victim").alias("keeper"),
-                                  F.col("keeper").alias("keeper2")).alias("r2"),
-                      "keeper", "left")
-                .select("victim",
-                        F.least(F.coalesce("keeper2", "keeper"), F.col("keeper"))
-                        .alias("keeper"))
-                .groupBy("victim").agg(F.min("keeper").alias("keeper")))
-    victims = root.select(F.col("victim").alias(id_col)).distinct()
+    from ie_spark.pipeline.canonicalize import connected_components_star
+    labels = connected_components_star(
+        dups.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
+    victims = (labels.filter(F.col("node") != F.col("component"))
+               .select(F.col("node").alias(id_col)))
     return docs.select(id_col).distinct().join(victims, id_col, "left_anti")
 
 

@@ -75,6 +75,13 @@ TRIPLE_SCHEMA = StructType([
     StructField("prep", StringType()),    # oblique preposition
 ])
 
+# the FULL fact identity (the merge key of the triples table): same
+# (s,p,o) in one sentence can differ in polarity/modal/role ("deployed the
+# service and did not deploy the service") — narrower keys would make
+# MERGE drop real facts
+TRIPLE_KEYS = ["conv_id", "turn_idx", "sent_idx", "subj", "pred", "obj",
+               "polarity", "modal", "role", "prep"]
+
 # single-pass combined output (mentions + triples discriminated by 'rec'),
 # so a full pipeline run extracts once and splits at the sink
 COMBINED_SCHEMA = StructType(

@@ -62,12 +62,6 @@ def merge_upsert(spark: SparkSession, df: DataFrame, target: str,
         df.dropDuplicates(keys).write.mode("overwrite").parquet(target)
 
 
-CHECKPOINT_SCHEMA = (
-    "job_id string, bucket int, status string, n_turns long, "
-    "n_triples long, wall_ms long, lineage string, finished_at timestamp"
-)
-
-
 def completed_buckets(spark: SparkSession, checkpoint_path: str) -> list[int]:
     """Buckets already marked ok in the checkpoint table (resume support)."""
     if not (os.path.isdir(checkpoint_path) and os.listdir(checkpoint_path)):

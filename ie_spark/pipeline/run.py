@@ -27,6 +27,7 @@ from ie_spark.pipeline.canonicalize import (
     connected_components_star as connected_components,
 )
 from ie_spark.pipeline.extract import (
+    TRIPLE_KEYS,
     extract_all,
     find_hot_convs,
     repartition_by_conv,
@@ -36,11 +37,6 @@ from ie_spark.pipeline.graph import merge_upsert, write_checkpoint
 from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
                                        link_mentions)
 
-# the FULL fact identity: same (s,p,o) in one sentence can differ in
-# polarity/modal/role ("deployed the service and did not deploy the
-# service") — narrower keys would make MERGE drop real facts
-TRIPLE_KEYS = ["conv_id", "turn_idx", "sent_idx", "subj", "pred", "obj",
-               "polarity", "modal", "role", "prep"]
 MENTION_KEYS = ["mention_id"]
 
 

@@ -21,13 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ie_spark.pipeline.extract import TRANSCRIPT_SCHEMA, extract_triples
+from ie_spark.pipeline.extract import (TRANSCRIPT_SCHEMA, TRIPLE_KEYS,
+                                       extract_triples)
 from ie_spark.pipeline.graph import merge_upsert
-
-# full fact identity (see pipeline/run.py) — narrower keys drop facts
-# that share (s,p,o) but differ in polarity/modal/role
-TRIPLE_KEYS = ["conv_id", "turn_idx", "sent_idx", "subj", "pred", "obj",
-               "polarity", "modal", "role", "prep"]
 
 
 def read_transcript_stream(spark: SparkSession, src_dir: str,

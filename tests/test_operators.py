@@ -11,9 +11,8 @@ from ie_spark.operators.dedup import (
     embedding_near_dups,
     exact_dedup_ids,
     jaccard_verify,
-    lsh_candidate_pairs,
     minhash_lsh_dedup,
-    minhash_signature,
+    shingle_frame,
     simhash,
     simhash_near_dups,
     with_shingles,
@@ -62,10 +61,13 @@ def test_minhash_lsh_finds_planted_dups(spark):
 
 def test_minhash_candidates_verified(spark):
     docs = _mk_docs(spark)
-    sh = with_shingles(docs)
-    sig = minhash_signature(sh)
-    cands = lsh_candidate_pairs(sig.filter(F.col("signature").isNotNull()))
-    verified = jaccard_verify(cands, sh, threshold=0.7).collect()
+    base = shingle_frame(docs)
+    a, b = base.alias("a"), base.alias("b")
+    cands = (a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+             .select(F.col("a.doc_id").alias("id_a"),
+                     F.col("b.doc_id").alias("id_b")))
+    verified = jaccard_verify(cands, base, threshold=0.7,
+                              shingle_col="sh_h").collect()
     pairs = {(r.id_a, r.id_b) for r in verified}
     assert (100, 101) in pairs
     for r in verified:
@@ -211,12 +213,10 @@ def test_lsh_max_bucket_drops_oversized_buckets(spark):
     rows = [(i, "common boilerplate text repeated everywhere in the corpus")
             for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id int, text string")
-    sh = with_shingles(docs, n=3)
-    signed = minhash_signature(sh)
-    uncapped = lsh_candidate_pairs(signed, max_bucket=None).count()
-    capped = lsh_candidate_pairs(signed, max_bucket=10).count()
-    assert uncapped == 40 * 39 // 2
-    assert capped == 0
+    uncapped = minhash_lsh_dedup(docs, max_bucket=None).collect()
+    capped = minhash_lsh_dedup(docs, max_bucket=10).collect()
+    assert [r[0] for r in uncapped] == [0]
+    assert sorted(r[0] for r in capped) == list(range(40))
 
 
 def test_ngram_pairs_match_bruteforce_property(spark):
@@ -249,35 +249,46 @@ def test_ngram_pairs_match_bruteforce_property(spark):
 
 
 def test_minhash_arrow_path_matches_expression_path(spark):
-    # the single-Arrow-pass pipeline (shingle+minhash+band in one
-    # mapInPandas, round-3 verdict perf item #5) must keep the survivors
-    # of the original expression pipeline — the two share the banding
-    # math (64 hashes / 16 bands) but use different hash families, and
-    # at J>=0.8 both recall every true pair (the sf0.01 driver oracle is
-    # the authoritative gate; this pins small-scale equality in-repo)
-    from ie_spark.operators.dedup import (
-        _minhash_arrow_frame,
-        with_shingles,
-    )
+    # the Arrow pass (shingle+minhash+band in one mapInPandas) must
+    # shingle exactly like the JVM expression shingler with_shingles:
+    # hashing with_shingles' grams with the pass's own base hash gives
+    # the same per-doc sets
+    import pandas as pd
+    from ie_spark.operators.dedup import _minhash_arrow_frame
+
+    def h(grams):
+        return set(pd.util.hash_pandas_object(
+            pd.Series(grams, dtype=object), index=False)
+            .to_numpy("uint64").view("int64").tolist())
+
     docs = _mk_docs(spark)
     arrow_kept = {r[0] for r in
                   minhash_lsh_dedup(docs, threshold=0.7).collect()}
-    sh = with_shingles(docs).select(
-        "doc_id", F.transform("shingles",
-                              lambda g: F.xxhash64(g)).alias("sh_h"))
-    sig = minhash_signature(sh, id_col="doc_id", shingle_col="sh_h",
-                            pre_hashed=True)
-    cands = lsh_candidate_pairs(sig.filter(F.col("signature").isNotNull()),
-                                id_col="doc_id")
-    expr_pairs = {(r.id_a, r.id_b)
-                  for r in jaccard_verify(cands, sh, threshold=0.7,
-                                          shingle_col="sh_h").collect()}
     base = _minhash_arrow_frame(docs, 3, 64, 16, "doc_id", "text")
-    arrow_shingles = {r["doc_id"]: len(r["sh_h"]) for r in base.collect()}
-    jvm_shingles = {r["doc_id"]: len(r["sh_h"]) for r in sh.collect()}
+    arrow_shingles = {r["doc_id"]: set(r["sh_h"]) for r in base.collect()}
+    jvm_shingles = {r["doc_id"]: h(r["shingles"])
+                    for r in with_shingles(docs).collect()}
     assert arrow_shingles == jvm_shingles  # same distinct-shingle sets
-    assert (100, 101) in expr_pairs
     assert 100 in arrow_kept and 101 not in arrow_kept
+
+
+def test_minhash_collapse_is_transitive(spark):
+    # chain 1–3–2: J(1,3) = J(2,3) = 26/30 clear 0.8, J(1,2) = 22/30 does
+    # not.  One component, so only its minimum id survives — the DuckDB
+    # oracle's recursive-CTE closure agrees
+    import duckdb
+    from __spark_entry__ import _minhash_survivors_oracle
+    w = [f"w{i}" for i in range(32)]
+    rows = [(1, " ".join(w[:-4])), (2, " ".join(w[4:])), (3, " ".join(w))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kept = {r[0] for r in minhash_lsh_dedup(docs, threshold=0.8).collect()}
+    assert kept == {1}
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        oracle = {r[0] for r in
+                  con.execute(_minhash_survivors_oracle()).fetchall()}
+    assert oracle == kept
 
 
 def test_minhash_arrow_deterministic_across_runs(spark):

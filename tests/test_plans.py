@@ -335,3 +335,15 @@ def test_fan_out_noops_on_wide_input(spark, tmp_path):
     assert out2 is not narrow
     assert out2.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism
+
+
+def test_input_bytes_decodes_file_uris(spark, tmp_path):
+    """``inputFiles`` returns percent-encoded URIs; a directory name with a
+    space must still count every file, not fall back to 0."""
+    from ie_spark.operators.partitioning import input_bytes
+    path = tmp_path / "with space.parquet"
+    spark.range(0, 1000, 1, 3).write.parquet(str(path))
+    files = list(path.glob("*.parquet"))
+    assert len(files) == 3
+    assert input_bytes(spark.read.parquet(str(path))) == \
+        sum(f.stat().st_size for f in files)
