@@ -322,7 +322,7 @@ def test_fan_out_noops_on_wide_input(spark, tmp_path):
     that is already at the session parallelism it must add NO exchange
     (the cluster-scale branch — guide §2.5)."""
     from pyspark.sql import functions as F
-    from ie_spark.operators.partitioning import adaptive_fan_out
+    from ie_spark.operators.partitioning import adaptive_fan_out, input_bytes
     par = spark.sparkContext.defaultParallelism
     wide = spark.range(0, 1000, 1, par).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
@@ -334,7 +334,37 @@ def test_fan_out_noops_on_wide_input(spark, tmp_path):
     out2 = adaptive_fan_out(narrow, "k")
     assert out2 is not narrow
     assert out2.rdd.getNumPartitions() == \
-        spark.sparkContext.defaultParallelism
+        min(par, max(8, par // 4, input_bytes(narrow) // (2 << 20)))
+
+
+def test_fan_out_width_rule(spark, tmp_path, monkeypatch):
+    """The fanned width is min(cores, max(8, cores // 4, bytes // 2 MiB)).
+    The test session is local[4], where the cap decides every width, so
+    the core count the policy reads is overridden to make each term
+    decide once."""
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+    from ie_spark.operators.partitioning import adaptive_fan_out, input_bytes
+    small, big = str(tmp_path / "small"), str(tmp_path / "big")
+    spark.range(0, 1000, 1, 1).write.parquet(small)
+    # ~24 MB of incompressible doubles in one file
+    spark.range(0, 3_000_000, 1, 1).select(F.rand(7).alias("x")) \
+        .write.parquet(big)
+    small_df, big_df = spark.read.parquet(small), spark.read.parquet(big)
+    per_2mib = input_bytes(big_df) // (2 << 20)
+    assert 8 < per_2mib < 16, per_2mib
+    assert big_df.rdd.getNumPartitions() < 16
+
+    def width(df, cores):
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: cores))
+        return adaptive_fan_out(df).rdd.getNumPartitions()
+
+    assert width(small_df, 4) == 4          # cap: cores
+    assert width(small_df, 16) == 8         # floor: 8
+    assert width(small_df, 64) == 16        # floor: cores // 4
+    assert width(big_df, 32) == per_2mib    # bytes // 2 MiB
+    assert width(big_df, 128) == 32         # cores // 4 beats the bytes
 
 
 def test_input_bytes_decodes_file_uris(spark, tmp_path):
