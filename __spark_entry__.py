@@ -145,10 +145,8 @@ def _q_kg_triples(spark, sf_dir):
     Projection: the template-defined columns; the referent columns
     (subj_ref/event_ref/obj_ref) are pytest-gated instead
     (test_boy_girl_referent_numbering) and stay in the operator API."""
-    from ie_spark.pipeline.extract import extract_triples
-    return extract_triples(_kg_transcripts(spark)).select(
-        "conv_id", "turn_idx", "sent_idx", "subj", "pred", "obj",
-        "polarity", "modal", "role", "prep")
+    from ie_spark.pipeline.extract import TRIPLE_KEYS, extract_triples
+    return extract_triples(_kg_transcripts(spark)).select(*TRIPLE_KEYS)
 
 
 def _q_kg_mentions(spark, sf_dir):

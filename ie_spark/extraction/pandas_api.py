@@ -4,6 +4,10 @@ These functions take/return pandas objects so they can be dropped straight
 into ``mapInPandas`` / ``applyInPandas`` (ie_spark.pipeline.extract). The
 per-sentence linguistic loop runs over a few thousand rows per Arrow batch;
 at the Spark API level nothing is per-row Python (input_hint requirement).
+
+``MENTION_COLUMNS`` and ``TRIPLE_COLUMNS`` are the one declaration of the
+KG records: the Spark schemas in ie_spark.pipeline.extract are derived
+from them (``turn_idx`` and ``sent_idx`` int, every other column string).
 """
 
 from __future__ import annotations
@@ -19,7 +23,9 @@ MENTION_COLUMNS = [
 TRIPLE_COLUMNS = [
     "conv_id", "turn_idx", "sent_idx",
     "subj", "pred", "obj", "subj_ref", "event_ref", "obj_ref", "polarity",
-    "modal", "role", "prep",
+    "modal",  # reference _MODAL (lexeme.py:683)
+    "role",   # ARG1 theme | ARG2 recipient/obl
+    "prep",   # oblique preposition
 ]
 
 

@@ -2,11 +2,13 @@
 
 Architecture (Spark-first, SURVEY.md §7.1 step 3):
 
-- The transcript scan is a plain columnar read; only (conv_id, turn_idx,
-  text) are selected before the UDF so Catalyst prunes every other column
-  at the source (ReadSchema).
-- Extraction is ``mapInPandas`` — Arrow-batched, no per-row Python at the
-  Spark API level, **no shuffle**: per-turn extraction is embarrassingly
+- Every per-turn surface (triples, mentions, the combined table, the
+  per-sentence views and ``extraction.drs.extract_drs_df``) is one Arrow
+  pass, ``_map_turns``: only (conv_id, turn_idx, text) are selected before
+  the UDF so Catalyst prunes every other column at the source
+  (ReadSchema), then ``mapInPandas`` runs the surface's batch body.
+- That pass is Arrow-batched, no per-row Python at the Spark API level,
+  and has **no shuffle**: per-turn extraction is embarrassingly
   parallel, so the plan is scan → project → mapInPandas, which scales
   linearly with executors (the north rule's N→4N efficiency comes free
   because there is no exchange to serialize).
@@ -14,13 +16,13 @@ Architecture (Spark-first, SURVEY.md §7.1 step 3):
   group by conv_id go through ``repartition_by_conv`` which hash-partitions
   with optional salting for mega-conversations (SURVEY.md §4 custom work #1).
 
-Reference parity: output schemas mirror SURVEY.md §1.2; the extraction
-semantics live in ie_spark.extraction.extractor (reference citations there).
+Reference parity: output schemas mirror SURVEY.md §1.2 and are derived
+from the one column declaration in ie_spark.extraction.pandas_api; the
+extraction semantics live in ie_spark.extraction.extractor (reference
+citations there).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +38,8 @@ from pyspark.sql.types import (
 from ie_spark.extraction.extractor import (dependency_rows,
                                            extract_constituents,
                                            verbnet_tree, verbnet_view)
-from ie_spark.extraction.pandas_api import extract_batch
+from ie_spark.extraction.pandas_api import (MENTION_COLUMNS, TRIPLE_COLUMNS,
+                                            extract_batch)
 from ie_spark.textproc.preprocess import split_sentences
 
 TRANSCRIPT_SCHEMA = StructType([
@@ -48,32 +51,16 @@ TRANSCRIPT_SCHEMA = StructType([
     StructField("ts", TimestampType()),
 ])
 
-MENTION_SCHEMA = StructType([
-    StructField("conv_id", StringType()),
-    StructField("turn_idx", IntegerType()),
-    StructField("sent_idx", IntegerType()),
-    StructField("mention_id", StringType()),
-    StructField("surface", StringType()),
-    StructField("stem", StringType()),
-    StructField("kind", StringType()),
-    StructField("ref", StringType()),
-])
 
-TRIPLE_SCHEMA = StructType([
-    StructField("conv_id", StringType()),
-    StructField("turn_idx", IntegerType()),
-    StructField("sent_idx", IntegerType()),
-    StructField("subj", StringType()),
-    StructField("pred", StringType()),
-    StructField("obj", StringType()),
-    StructField("subj_ref", StringType()),
-    StructField("event_ref", StringType()),
-    StructField("obj_ref", StringType()),
-    StructField("polarity", StringType()),
-    StructField("modal", StringType()),   # reference _MODAL (lexeme.py:683)
-    StructField("role", StringType()),    # ARG1 theme | ARG2 recipient/obl
-    StructField("prep", StringType()),    # oblique preposition
-])
+def _record_schema(columns: list[str]) -> StructType:
+    return StructType([
+        StructField(c, IntegerType() if c in ("turn_idx", "sent_idx")
+                    else StringType())
+        for c in columns])
+
+
+MENTION_SCHEMA = _record_schema(MENTION_COLUMNS)
+TRIPLE_SCHEMA = _record_schema(TRIPLE_COLUMNS)
 
 # the FULL fact identity (the merge key of the triples table): same
 # (s,p,o) in one sentence can differ in polarity/modal/role ("deployed the
@@ -84,62 +71,33 @@ TRIPLE_KEYS = ["conv_id", "turn_idx", "sent_idx", "subj", "pred", "obj",
 
 # single-pass combined output (mentions + triples discriminated by 'rec'),
 # so a full pipeline run extracts once and splits at the sink
-COMBINED_SCHEMA = StructType(
-    [StructField("rec", StringType())]
-    + [f for f in TRIPLE_SCHEMA.fields]
-    + [StructField("mention_id", StringType()),
-       StructField("surface", StringType()),
-       StructField("stem", StringType()),
-       StructField("kind", StringType()),
-       StructField("ref", StringType())]
-)
+COMBINED_COLUMNS = (["rec"] + TRIPLE_COLUMNS
+                    + [c for c in MENTION_COLUMNS if c not in TRIPLE_COLUMNS])
+COMBINED_SCHEMA = _record_schema(COMBINED_COLUMNS)
 
 
-def _mentions_to_combined(m: pd.DataFrame) -> pd.DataFrame:
-    out = pd.DataFrame({
-        "rec": "m",
-        "conv_id": m["conv_id"], "turn_idx": m["turn_idx"],
-        "sent_idx": m["sent_idx"],
-        "subj": None, "pred": None, "obj": None,
-        "subj_ref": None, "event_ref": None, "obj_ref": None,
-        "polarity": None, "modal": None, "role": None, "prep": None,
-        "mention_id": m["mention_id"], "surface": m["surface"],
-        "stem": m["stem"], "kind": m["kind"], "ref": m["ref"],
-    })
-    return out
+def _map_turns(transcripts: DataFrame, body, schema) -> DataFrame:
+    """The one Arrow pass of every per-turn surface: prune to (conv_id,
+    turn_idx, text), so the parquet scan reads three columns, then
+    ``mapInPandas`` yields ``body(pdf)`` for each batch (shuffle-free)."""
+    def gen(batches):
+        for pdf in batches:
+            yield body(pdf)
 
-
-def _triples_to_combined(t: pd.DataFrame) -> pd.DataFrame:
-    out = t.copy()
-    out.insert(0, "rec", "t")
-    for c in ("mention_id", "surface", "stem", "kind", "ref"):
-        out[c] = None
-    return out
-
-
-def _select_text(transcripts: DataFrame) -> DataFrame:
-    # prune columns before the UDF → parquet scan reads 3 columns only
-    return transcripts.select("conv_id", "turn_idx", "text")
+    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+        gen, schema=schema)
 
 
 def extract_triples(transcripts: DataFrame) -> DataFrame:
     """transcripts → triples table (scan → mapInPandas, shuffle-free)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _, triples = extract_batch(pdf)
-            yield triples
-
-    return _select_text(transcripts).mapInPandas(fn, schema=TRIPLE_SCHEMA)
+    return _map_turns(transcripts, lambda pdf: extract_batch(pdf)[1],
+                      TRIPLE_SCHEMA)
 
 
 def extract_mentions(transcripts: DataFrame) -> DataFrame:
     """transcripts → mentions table (scan → mapInPandas, shuffle-free)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mentions, _ = extract_batch(pdf)
-            yield mentions
-
-    return _select_text(transcripts).mapInPandas(fn, schema=MENTION_SCHEMA)
+    return _map_turns(transcripts, lambda pdf: extract_batch(pdf)[0],
+                      MENTION_SCHEMA)
 
 
 _SENT_KEY = "conv_id string, turn_idx int, sent_idx int, "
@@ -173,13 +131,9 @@ def _sentence_rows(pdf: pd.DataFrame, fn, cols: str) -> pd.DataFrame:
 
 
 def _per_sentence_frame(transcripts: DataFrame, fn, cols: str) -> DataFrame:
-    """transcripts → one Arrow mapInPandas pass of ``_sentence_rows``
-    (shuffle-free, like every extraction surface)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _sentence_rows(pdf, fn, cols)
-
-    return _select_text(transcripts).mapInPandas(gen, schema=_SENT_KEY + cols)
+    """transcripts → the ``_map_turns`` pass of ``_sentence_rows``."""
+    return _map_turns(transcripts, lambda pdf: _sentence_rows(pdf, fn, cols),
+                      _SENT_KEY + cols)
 
 
 def extract_constituents_df(transcripts: DataFrame) -> DataFrame:
@@ -228,27 +182,25 @@ def extract_dependencies_df(transcripts: DataFrame) -> DataFrame:
                                "tok_idx int, token string, head int")
 
 
+def _combined_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    mentions, triples = extract_batch(pdf)
+    return pd.concat([triples.assign(rec="t"),
+                      mentions.assign(rec="m")])[COMBINED_COLUMNS]
+
+
 def extract_all(transcripts: DataFrame) -> DataFrame:
     """Single-pass extraction of mentions AND triples into one discriminated
-    long table ('rec' = 'm'|'t').  Use when materializing both sinks: one
-    scan + one UDF pass, split with cheap filters afterwards (ideally after
-    a write, so the UDF is not re-executed per branch)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mentions, triples = extract_batch(pdf)
-            yield pd.concat(
-                [_triples_to_combined(triples), _mentions_to_combined(mentions)],
-                ignore_index=True)
-
-    return _select_text(transcripts).mapInPandas(fn, schema=COMBINED_SCHEMA)
+    long table ('rec' = 'm'|'t'; the other record's columns are NULL).  Use
+    when materializing both sinks: one scan + one UDF pass, split with cheap
+    filters afterwards (ideally after a write, so the UDF is not re-executed
+    per branch)."""
+    return _map_turns(transcripts, _combined_rows, COMBINED_SCHEMA)
 
 
 def split_combined(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Discriminated extraction output → (mentions_df, triples_df)."""
-    mentions = combined.filter(F.col("rec") == "m").select(
-        *[f.name for f in MENTION_SCHEMA.fields])
-    triples = combined.filter(F.col("rec") == "t").select(
-        *[f.name for f in TRIPLE_SCHEMA.fields])
+    mentions = combined.filter(F.col("rec") == "m").select(*MENTION_COLUMNS)
+    triples = combined.filter(F.col("rec") == "t").select(*TRIPLE_COLUMNS)
     return mentions, triples
 
 

@@ -82,14 +82,6 @@ def write_checkpoints(spark: SparkSession, checkpoint_path: str,
     df.coalesce(1).write.mode("append").parquet(checkpoint_path)
 
 
-def write_checkpoint(spark: SparkSession, checkpoint_path: str, job_id: str,
-                     bucket: int, n_turns: int, n_triples: int,
-                     wall_ms: int, lineage: str) -> None:
-    write_checkpoints(spark, checkpoint_path,
-                      [(job_id, bucket, "ok", n_turns, n_triples,
-                        wall_ms, lineage)])
-
-
 def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 

@@ -33,7 +33,7 @@ from ie_spark.pipeline.extract import (
     repartition_by_conv,
     split_combined,
 )
-from ie_spark.pipeline.graph import merge_upsert, write_checkpoint
+from ie_spark.pipeline.graph import merge_upsert, write_checkpoints
 from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
                                        link_mentions)
 
@@ -43,9 +43,7 @@ MENTION_KEYS = ["mention_id"]
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                  candidates: DataFrame | None = None,
                  job_id: str = "pipeline",
-                 salt_threshold: int | None = 100_000,
-                 num_partitions: int | None = None,
-                 spell_normalize: bool = False) -> dict:
+                 salt_threshold: int | None = 100_000) -> dict:
     """Full KG construction run.  Idempotent: re-running on the same input
     yields identical tables (merge on natural keys).
 
@@ -55,19 +53,16 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     mega-conversation cannot pin one partition.  Pass
     ``salt_threshold=None`` to skip the pre-pass when the input is known
     to be well-distributed (extraction itself is per-turn and would run
-    shuffle-free without it)."""
+    shuffle-free without it).
+
+    Spell normalization (C14, off in every oracled path) is a pre-pass
+    the caller applies: ``run_pipeline(spark, with_spell_normalized(t),
+    out)`` (ie_spark.textproc.spell)."""
     t0 = time.time()
     os.makedirs(out_dir, exist_ok=True)
 
-    if spell_normalize:
-        # opt-in C14 pre-pass (reference kb/spell.py, never in its main
-        # path either): broadcast SymSpell delete-index, one Arrow UDF.
-        # OFF for every oracled/golden path.
-        from ie_spark.textproc.spell import with_spell_normalized
-        transcripts = with_spell_normalized(transcripts)
-
     if salt_threshold is not None:
-        parts = num_partitions or spark.sparkContext.defaultParallelism * 2
+        parts = spark.sparkContext.defaultParallelism * 2
         hot = find_hot_convs(transcripts, salt_threshold)
         transcripts = repartition_by_conv(
             transcripts, parts, salt_buckets=parts if hot else 0,
@@ -123,9 +118,8 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         "n_edges": spark.read.parquet(os.path.join(out_dir, "edges")).count(),
         "wall_s": round(time.time() - t0, 2),
     }
-    write_checkpoint(spark, os.path.join(out_dir, "_checkpoints"), job_id,
-                     bucket=-1, n_turns=stats["n_turns"],
-                     n_triples=stats["n_triples"],
-                     wall_ms=int(stats["wall_s"] * 1000),
-                     lineage=f"run_pipeline:v1:{out_dir}")
+    write_checkpoints(spark, os.path.join(out_dir, "_checkpoints"),
+                      [(job_id, -1, "ok", stats["n_turns"], stats["n_triples"],
+                        int(stats["wall_s"] * 1000),
+                        f"run_pipeline:v1:{out_dir}")])
     return stats

@@ -58,6 +58,39 @@ def test_single_pass_combined_equals_two_pass(spark, transcripts):
     assert t2.exceptAll(t1).count() == 0
     m1 = extract_mentions(transcripts)
     assert m1.exceptAll(m2).count() == 0
+    assert m2.exceptAll(m1).count() == 0
+
+
+@pytest.mark.parametrize("layout", ["one_batch", "batch_per_turn"])
+def test_extract_all_pads_other_record_with_null(spark, layout):
+    """In the combined table a triple row ('t') has NULL mention columns
+    and a mention row ('m') NULL triple columns: the NaN padding of the
+    pandas concat must cross Arrow as NULL, also in batches that hold no
+    triple (a turn with mentions only, no mentions, empty or NULL text)."""
+    pdf = pd.DataFrame(
+        [("c1", 0, "Bob deployed the service."), ("c1", 1, "Hello."),
+         ("c1", 2, "The red server."), ("c1", 3, ""), ("c1", 4, None)],
+        columns=["conv_id", "turn_idx", "text"])
+    text = spark.createDataFrame(pdf, "conv_id string, turn_idx int, "
+                                      "text string")
+    if layout == "one_batch":
+        text = text.coalesce(1)
+    else:
+        text = text.repartitionByRange(5, "turn_idx")
+        assert text.rdd.glom().map(len).collect() == [1] * 5
+    rows = extract_all(text).collect()
+    t = [r for r in rows if r["rec"] == "t"]
+    m = [r for r in rows if r["rec"] == "m"]
+    assert t and m and len(t) + len(m) == len(rows)
+    assert {r["turn_idx"] for r in t} == {0}
+    assert {r["turn_idx"] for r in m} == {0, 2}
+    mention_only = ["mention_id", "surface", "stem", "kind", "ref"]
+    triple_only = ["subj", "pred", "obj", "subj_ref", "event_ref",
+                   "obj_ref", "polarity", "modal", "role", "prep"]
+    assert all(r[c] is None for r in t for c in mention_only)
+    assert all(r[c] is None for r in m for c in triple_only)
+    assert all(r[c] is not None for r in t for c in ("subj", "pred", "obj"))
+    assert all(r["mention_id"] is not None for r in m)
 
 
 def test_extraction_deterministic_across_partitioning(spark, transcripts):
