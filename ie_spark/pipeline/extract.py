@@ -13,8 +13,8 @@ Architecture (Spark-first, SURVEY.md §7.1 step 3):
   linearly with executors (the north rule's N→4N efficiency comes free
   because there is no exchange to serialize).
 - Conversation-level operations (checkpointing, graph building) that DO
-  group by conv_id go through ``repartition_by_conv`` which hash-partitions
-  with optional salting for mega-conversations (SURVEY.md §4 custom work #1).
+  group by conv_id hash-partition on ``conv_keys``: conv_id, plus a
+  per-turn salt for mega-conversations (SURVEY.md §4 custom work #1).
 
 Reference parity: output schemas mirror SURVEY.md §1.2 and are derived
 from the one column declaration in ie_spark.extraction.pandas_api; the
@@ -25,7 +25,7 @@ citations there).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -204,25 +204,20 @@ def split_combined(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     return mentions, triples
 
 
-def repartition_by_conv(df: DataFrame, num_partitions: int,
-                        salt_buckets: int = 0,
-                        hot_convs: list[str] | None = None) -> DataFrame:
-    """Hash-repartition by conv_id with optional salting of hot keys.
-
-    AQE cannot salt a groupBy key by itself (SURVEY.md §4); for
-    mega-conversations (10^8-turn conv_ids at the 10^12 scale) callers pass
-    the hot conv_ids from a cheap first-pass count and per-turn salt spreads
-    them over ``salt_buckets`` partitions.
-    """
-    if salt_buckets and hot_convs:
-        salted = F.when(
-            F.col("conv_id").isin(hot_convs),
-            F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets)),
-        ).otherwise(F.lit(0))
-        return (df.withColumn("_salt", salted)
-                  .repartition(num_partitions, "conv_id", "_salt")
-                  .drop("_salt"))
-    return df.repartition(num_partitions, "conv_id")
+def conv_keys(salt_buckets: int = 0,
+              hot_convs: list[str] | None = None) -> list[Column]:
+    """Hash-partitioning keys by conversation: conv_id, plus a per-turn
+    salt over ``salt_buckets`` for the hot conversations, so a
+    mega-conversation (found by ``find_hot_convs``) cannot pin one
+    partition.  ``pmod(hash(*keys), n)`` is the partition
+    ``repartition(n, *keys)`` puts a row in (``F.hash`` is the Murmur3 of
+    hash partitioning), so it can be recomputed from any frame that still
+    carries conv_id and turn_idx."""
+    if not (salt_buckets and hot_convs):
+        return [F.col("conv_id")]
+    salt = F.when(F.col("conv_id").isin(hot_convs),
+                  F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets)))
+    return [F.col("conv_id"), salt.otherwise(F.lit(0))]
 
 
 def find_hot_convs(transcripts: DataFrame, threshold: int) -> list[str]:

@@ -1,20 +1,39 @@
 """End-to-end pipeline orchestrator: transcripts → triples + mentions →
-linked mentions → canonical nodes/edges, all materialized with idempotent
-merge and per-bucket checkpoints.
+linked mentions → canonical nodes/edges, resumable from per-partition
+checkpoints.
 
 This is the single entry point a user of the reference would switch to:
 
     from ie_spark.pipeline.run import run_pipeline
     stats = run_pipeline(spark, transcripts_df, "/warehouse/kg")
 
-Produces (parquet dirs or Iceberg tables, see graph.merge_upsert):
-    <out>/mentions   <out>/triples   <out>/linked   <out>/nodes
-    <out>/edges      <out>/_checkpoints
+Produces parquet dirs under ``os.path.abspath(out)``:
+    _extracted   one extraction pass, partitioned by ``_bucket``
+    mentions  triples  linked    fact tables, merged on their keys
+    coref  nodes  edges          derived tables, recomputed and replaced
+    _checkpoints                 one ``ok`` row per bucket, one per run
+                                 (bucket −1), see the resume rule
+
+Resume rule: the bucket is the partition the conv_id repartition puts a
+turn in, so each extraction task writes one ``_extracted/_bucket=b``
+directory.  A bucket row's lineage names its layout: the bucket count, the
+hot (salted) conversations and a fingerprint of the input's (conv_id,
+turn_idx, text) rows.  A call skips bucket b only if ``_checkpoints``
+holds an ``ok`` row for b with the same ``job_id`` and the same lineage,
+written after that job's last bucket −1 row.  That row is the completion
+row, or the ``discarded`` row a fresh extraction writes before it deletes
+the files of open rows of another layout, so open rows share one layout.
+A run that crashed after extraction thus resumes without re-extracting
+when it is handed the same input again, while another input, another salt
+layout or a finished run starts a fresh extraction (an incremental delta
+is never skipped).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -27,10 +46,11 @@ from ie_spark.pipeline.canonicalize import (
     connected_components_star as connected_components,
 )
 from ie_spark.pipeline.extract import (
+    COMBINED_SCHEMA,
     TRIPLE_KEYS,
+    conv_keys,
     extract_all,
     find_hot_convs,
-    repartition_by_conv,
     split_combined,
 )
 from ie_spark.pipeline.graph import merge_upsert, write_checkpoints
@@ -40,42 +60,107 @@ from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
 MENTION_KEYS = ["mention_id"]
 
 
+def _open_rows(spark: SparkSession, cp_path: str, job_id: str) -> list:
+    """The ``ok`` bucket rows ``job_id`` wrote after its last bucket −1
+    row (a completion or a discard), oldest first."""
+    if not (os.path.isdir(cp_path) and os.listdir(cp_path)):
+        return []
+    rows = sorted(spark.read.parquet(cp_path)
+                  .filter(F.col("job_id") == job_id)
+                  .select("bucket", "status", "n_turns", "lineage",
+                          "finished_at")
+                  .collect(), key=lambda r: r.finished_at)
+    closed = max((r.finished_at for r in rows if r.bucket < 0), default=None)
+    return [r for r in rows if r.bucket >= 0 and r.status == "ok"
+            and (closed is None or r.finished_at > closed)]
+
+
+def _lineage(parts: int, hot: list[str], fingerprint) -> str:
+    """A bucket row's lineage: the layout its bucket was written under."""
+    digest = hashlib.sha1(repr((str(fingerprint), sorted(hot))).encode())
+    return f"run_pipeline:v1:{parts} buckets:{digest.hexdigest()[:16]}"
+
+
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                  candidates: DataFrame | None = None,
                  job_id: str = "pipeline",
                  salt_threshold: int | None = 100_000) -> dict:
     """Full KG construction run.  Idempotent: re-running on the same input
-    yields identical tables (merge on natural keys).
+    yields identical tables (fact tables merge on natural keys, derived
+    tables are rebuilt from them), and base-then-delta equals one run over
+    the union.
 
     Partitioning (north rule): the input is explicitly hash-repartitioned
     by conv_id; conversations exceeding ``salt_threshold`` turns (found by
     a cheap count pre-pass) are salted per-turn so a 10^8-turn
     mega-conversation cannot pin one partition.  Pass
     ``salt_threshold=None`` to skip the pre-pass when the input is known
-    to be well-distributed (extraction itself is per-turn and would run
-    shuffle-free without it).
+    to be well-distributed; the repartition still runs, because its
+    partitions are the resume buckets (see the module docstring).
+    ``stats["resumed"]`` lists the skipped buckets.
 
     Spell normalization (C14, off in every oracled path) is a pre-pass
     the caller applies: ``run_pipeline(spark, with_spell_normalized(t),
     out)`` (ie_spark.textproc.spell)."""
     t0 = time.time()
+    out_dir = os.path.abspath(out_dir)
     os.makedirs(out_dir, exist_ok=True)
-
-    if salt_threshold is not None:
-        parts = spark.sparkContext.defaultParallelism * 2
-        hot = find_hot_convs(transcripts, salt_threshold)
-        transcripts = repartition_by_conv(
-            transcripts, parts, salt_buckets=parts if hot else 0,
-            hot_convs=hot or None)
-
-    # 1. single-pass extraction (one scan, one Arrow UDF pass, no shuffle
-    #    beyond the explicit repartition above), materialized once then
-    #    split from storage; the turn count rides on that write
     staged = os.path.join(out_dir, "_extracted")
-    turns = Observation()
-    transcripts = transcripts.observe(turns, F.count(F.lit(1)).alias("n"))
-    extract_all(transcripts).write.mode("overwrite").parquet(staged)
-    combined = spark.read.parquet(staged)
+    cp_path = os.path.join(out_dir, "_checkpoints")
+
+    parts = spark.sparkContext.defaultParallelism * 2
+    hot = ([] if salt_threshold is None
+           else find_hot_convs(transcripts, salt_threshold))
+    keys = conv_keys(parts, hot)
+    bucket = F.pmod(F.hash(*keys), F.lit(parts))
+    # order-free sum of per-turn hashes; decimal so the sum cannot overflow
+    fingerprint = F.sum(F.xxhash64("conv_id", "turn_idx", "text")
+                        .cast("decimal(38,0)"))
+    # only a crashed run leaves open rows; only then is the input hashed
+    # up front, to check it is the input those rows were written from
+    open_rows = _open_rows(spark, cp_path, job_id)
+    done = {}
+    if open_rows:
+        lineage = _lineage(parts, hot, transcripts.agg(fingerprint).first()[0])
+        done = {r.bucket: r.n_turns for r in open_rows if r.lineage == lineage}
+    todo = [b for b in range(parts) if b not in done]
+    n_turns = sum(done.values())
+
+    # 1. single-pass extraction of the open buckets (one scan, one Arrow
+    #    UDF pass, no shuffle beyond the repartition), materialized once
+    #    then split from storage.  Dropping what is about to be rewritten
+    #    first heals torn writes and stale empty buckets.
+    if todo:
+        t1 = time.time()
+        if open_rows and not done:
+            # close the open rows before their files go, so a crash in
+            # this extraction cannot make a later call resume them
+            write_checkpoints(spark, cp_path, [
+                (job_id, -1, "discarded", 0, 0, 0, lineage)])
+        for d in ([os.path.join(staged, f"_bucket={b}") for b in todo]
+                  if done else [staged]):
+            shutil.rmtree(d, ignore_errors=True)
+        turns, facts = Observation(), Observation()
+        transcripts = transcripts.observe(
+            turns, fingerprint.alias("fp"),
+            *[F.count_if(bucket == b).alias(f"b{b}") for b in todo])
+        if done:
+            transcripts = transcripts.filter(~bucket.isin(*done))
+        extracted = extract_all(transcripts.repartition(parts, *keys))
+        is_triple = F.col("rec") == "t"
+        (extracted.observe(facts, *[
+            F.count_if(is_triple & (bucket == b)).alias(f"b{b}")
+            for b in todo])
+         .withColumn("_bucket", bucket)
+         .write.mode("append").partitionBy("_bucket").parquet(staged))
+        wall_ms = int((time.time() - t1) * 1000)
+        n, t = turns.get, facts.get
+        lineage = _lineage(parts, hot, n.pop("fp"))
+        write_checkpoints(spark, cp_path, [
+            (job_id, b, "ok", n[f"b{b}"], t[f"b{b}"], wall_ms, lineage)
+            for b in todo])
+        n_turns += sum(n.values())
+    combined = spark.read.schema(COMBINED_SCHEMA).parquet(staged)
     mentions, triples = split_combined(combined)
 
     merge_upsert(spark, mentions, os.path.join(out_dir, "mentions"),
@@ -92,11 +177,13 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                  keys=MENTION_KEYS)
     linked = spark.read.parquet(os.path.join(out_dir, "linked"))
 
-    # 2b. cross-sentence pronoun resolution (nearest-antecedent)
+    # 2b. cross-sentence pronoun resolution (nearest-antecedent).  Derived
+    #     tables are rebuilt from the full fact tables and replaced: a late
+    #     earlier turn can change an antecedent, a new alias a node label.
     from ie_spark.pipeline.coref import resolve_pronouns
-    coref = resolve_pronouns(mentions)
-    merge_upsert(spark, coref, os.path.join(out_dir, "coref"),
-                 keys=["conv_id", "turn_idx", "sent_idx", "pronoun"])
+    (resolve_pronouns(mentions)
+     .dropDuplicates(["conv_id", "turn_idx", "sent_idx", "pronoun"])
+     .write.mode("overwrite").parquet(os.path.join(out_dir, "coref")))
 
     # 3. canonicalization (connected components over mention–entity + _AKA)
     labels = connected_components(build_identity_edges(linked, triples))
@@ -104,21 +191,22 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
 
     # 4. edge materialization with canonical endpoints
-    edges = canonical_edges(triples, labels)
-    merge_upsert(spark, edges, os.path.join(out_dir, "edges"),
-                 keys=["src", "pred", "dst", "conv_id", "turn_idx",
-                       "sent_idx", "polarity"])
+    (canonical_edges(triples, labels)
+     .dropDuplicates(["src", "pred", "dst", "conv_id", "turn_idx",
+                      "sent_idx", "polarity"])
+     .write.mode("overwrite").parquet(os.path.join(out_dir, "edges")))
 
     stats = {
         "job_id": job_id,
-        "n_turns": int(turns.get["n"]),
+        "n_turns": n_turns,
         "n_mentions": mentions.count(),
         "n_triples": triples.count(),
         "n_nodes": spark.read.parquet(os.path.join(out_dir, "nodes")).count(),
         "n_edges": spark.read.parquet(os.path.join(out_dir, "edges")).count(),
+        "resumed": sorted(done),
         "wall_s": round(time.time() - t0, 2),
     }
-    write_checkpoints(spark, os.path.join(out_dir, "_checkpoints"),
+    write_checkpoints(spark, cp_path,
                       [(job_id, -1, "ok", stats["n_turns"], stats["n_triples"],
                         int(stats["wall_s"] * 1000),
                         f"run_pipeline:v1:{out_dir}")])

@@ -2,11 +2,14 @@
 canonicalization + idempotent graph materialization."""
 
 import os
+import shutil
 
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from ie_spark.data.synthetic import corpus_to_pandas
+from ie_spark.pipeline import run
 from ie_spark.pipeline.canonicalize import (
     build_identity_edges,
     canonical_mention_map,
@@ -14,13 +17,14 @@ from ie_spark.pipeline.canonicalize import (
     connected_components_star,
 )
 from ie_spark.pipeline.extract import (
+    conv_keys,
+    extract_all,
     extract_mentions,
     extract_triples,
     find_hot_convs,
-    repartition_by_conv,
     transcripts_from_pandas,
 )
-from ie_spark.pipeline.graph import merge_upsert, run_extraction_job
+from ie_spark.pipeline.graph import merge_upsert, write_checkpoints
 from ie_spark.pipeline.linking import build_candidate_dict, link_mentions
 
 
@@ -169,25 +173,91 @@ def test_merge_upsert_idempotent(spark, tmp_path):
     df2 = spark.createDataFrame([(2, "b"), (3, "c")], "k int, v string")
     merge_upsert(spark, df2, path, keys=["k"])
     assert spark.read.parquet(path).count() == 3
+    # appends keep the target's column order when the key is not first:
+    # every file, so the order read back does not hang on file names
+    import pyarrow.parquet as pq
+    path = str(tmp_path / "facts_vk")
+    merge_upsert(spark, df.select("v", "k"), path, keys=["k"])
+    merge_upsert(spark, df2.select("v", "k"), path, keys=["k"])
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) >= 2
+    for f in files:
+        assert pq.read_schema(os.path.join(path, f)).names == ["v", "k"], f
+    out = spark.read.parquet(path)
+    assert out.columns == ["v", "k"]
+    assert sorted(map(tuple, out.collect())) == [("a", 1), ("b", 2), ("c", 3)]
 
 
-def test_resumable_bucketed_job(spark, tmp_path):
-    tr, gt, _ = corpus_to_pandas(n_convs=20, seed=3)
+def _bucket_files(out):
+    """{bucket: parquet file names} of a run's ``_extracted`` table."""
+    staged = os.path.join(out, "_extracted")
+    return {int(d.split("=")[1]):
+            sorted(f for f in os.listdir(os.path.join(staged, d))
+                   if f.endswith(".parquet"))
+            for d in os.listdir(staged) if d.startswith("_bucket=")}
+
+
+def _keep_open(spark, out, buckets):
+    """Rewrite ``_checkpoints`` so only ``buckets`` keep their ok row,
+    as if the run had committed no other bucket."""
+    cp_path = os.path.join(out, "_checkpoints")
+    rows = [tuple(r)[:7] for r in spark.read.parquet(cp_path).collect()
+            if r.bucket in buckets]
+    shutil.rmtree(cp_path)
+    write_checkpoints(spark, cp_path, rows)
+
+
+@pytest.fixture(scope="module")
+def crashed(spark, tmp_path_factory):
+    """(transcripts, n_turns, dir) of a run_pipeline call that raised
+    right after its ``_extracted`` write had been checkpointed.  Tests
+    resume from a copy of ``dir``."""
+    tr, _, _ = corpus_to_pandas(n_convs=20, seed=3)
     df = transcripts_from_pandas(spark, tr)
-    out = str(tmp_path / "job")
-    s1 = run_extraction_job(spark, df, out, n_buckets=4)
-    assert sorted(s1["processed"]) == [0, 1, 2, 3]
-    n1 = spark.read.parquet(os.path.join(out, "triples")).count()
-    # resume: everything checkpointed → nothing reprocessed, output unchanged
-    s2 = run_extraction_job(spark, df, out, n_buckets=4)
-    assert s2["processed"] == []
-    assert sorted(s2["buckets_done"]) == [0, 1, 2, 3]
-    n2 = spark.read.parquet(os.path.join(out, "triples")).count()
-    assert n1 == n2
+    out = str(tmp_path_factory.mktemp("crashed") / "kg")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after extraction")
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(run, "link_mentions", crash)
+        with pytest.raises(RuntimeError, match="crash after extraction"):
+            run.run_pipeline(spark, df, out)
+    return df, len(tr), out
+
+
+def _resume_copy(crashed, tmp_path):
+    out = str(tmp_path / "kg")
+    shutil.copytree(crashed[2], out)
+    return out
+
+
+def test_resumable_bucketed_job(spark, tmp_path, monkeypatch, crashed,
+                                kg_tables):
+    """A run that crashed after extraction resumes from its per-bucket
+    checkpoints: the second call extracts nothing and ends with the
+    tables of a clean run."""
+    df, n_turns, _ = crashed
+    out = _resume_copy(crashed, tmp_path)
+    before = _bucket_files(out)
+    parts = spark.sparkContext.defaultParallelism * 2
+
+    def no_extraction(*args, **kwargs):
+        raise AssertionError("a resumed bucket was re-extracted")
+    with monkeypatch.context() as m:
+        m.setattr(run, "extract_all", no_extraction)
+        s = run.run_pipeline(spark, df, out)
+    assert s["resumed"] == list(range(parts))
+    assert s["n_turns"] == n_turns
+    assert _bucket_files(out) == before
+    clean = str(tmp_path / "clean")
+    run.run_pipeline(spark, df, clean)
+    assert kg_tables(out) == kg_tables(clean)
     # checkpoint rows carry metrics + lineage
     cp = spark.read.parquet(os.path.join(out, "_checkpoints")).toPandas()
     assert set(cp.status) == {"ok"}
-    assert (cp.n_turns > 0).any() and cp.lineage.str.startswith("extract:v1").all()
+    assert (cp.n_turns > 0).any() and (cp.n_triples > 0).any()
+    assert cp.lineage.str.startswith("run_pipeline:v1").all()
+    assert sorted(cp.bucket) == [-1] + list(range(parts))
 
 
 def test_skew_salting_repartition(spark):
@@ -195,7 +265,7 @@ def test_skew_salting_repartition(spark):
     df = transcripts_from_pandas(spark, tr)
     hot = find_hot_convs(df, threshold=100)
     assert hot, "skew knob should produce at least one mega-conversation"
-    salted = repartition_by_conv(df, 8, salt_buckets=8, hot_convs=hot)
+    salted = df.repartition(8, *conv_keys(8, hot))
     # row preservation under salting
     assert salted.count() == df.count()
     # hot conversation rows spread across >1 partition
@@ -204,43 +274,56 @@ def test_skew_salting_repartition(spark):
     assert pid > 1
 
 
-def test_extraction_job_is_single_pass(spark, tmp_path):
-    """The bucketed job must NOT loop buckets on the driver: total Spark
-    jobs stay O(1) regardless of n_buckets (was O(n_buckets) full scans)."""
-    from ie_spark.pipeline.graph import run_extraction_job
+def test_extraction_job_is_single_pass(spark, tmp_path, monkeypatch):
+    """run_pipeline does not loop buckets on the driver: it runs the same
+    number of Spark jobs at 8 and at 128 buckets."""
     tr, _, _ = corpus_to_pandas(n_convs=30, seed=7)
     df = transcripts_from_pandas(spark, tr)
     sc = spark.sparkContext
-    sc.setJobGroup("single_pass_probe", "count jobs")
-    try:
-        run_extraction_job(spark, df, str(tmp_path / "job64"), n_buckets=64)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("single_pass_probe")
-    assert 0 < len(jobs) <= 10, f"{len(jobs)} jobs for 64 buckets"
-    # triples are laid out as real _bucket partitions (pruned read-back)
-    import os as _os
-    parts = [d for d in _os.listdir(str(tmp_path / "job64" / "triples"))
-             if d.startswith("_bucket=")]
-    assert parts
+
+    def jobs(cores):
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: cores))
+        group = f"single_pass_probe_{cores}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            run.run_pipeline(spark, df, str(tmp_path / f"job{cores}"))
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    n8, n128 = jobs(4), jobs(64)
+    assert 0 < n8 == n128, f"{n8} jobs at 8 buckets, {n128} at 128"
+    # _extracted is laid out as real _bucket partitions
+    assert _bucket_files(str(tmp_path / "job64"))
 
 
-def test_extraction_job_partial_resume(spark, tmp_path):
-    """Buckets already checkpointed are skipped; only the remainder is
-    processed and written (per-partition resume)."""
-    from ie_spark.pipeline.graph import run_extraction_job, write_checkpoints
-    tr, _, _ = corpus_to_pandas(n_convs=20, seed=3)
-    df = transcripts_from_pandas(spark, tr)
-    out = str(tmp_path / "jobpart")
-    write_checkpoints(spark, os.path.join(out, "_checkpoints"),
-                      [("pre", b, "ok", 1, 1, 0, "extract:v1:pre")
-                       for b in (0, 1)])
-    s = run_extraction_job(spark, df, out, n_buckets=4)
-    assert s["processed"] == [2, 3]
-    assert sorted(s["buckets_done"]) == [0, 1]
-    got = (spark.read.parquet(os.path.join(out, "triples"))
-           .select("_bucket").distinct())
-    assert sorted(r[0] for r in got.collect()) == [2, 3]
+def test_extraction_job_partial_resume(spark, tmp_path, monkeypatch,
+                                       crashed):
+    """Buckets with an open checkpoint row are skipped; only the rest are
+    extracted and rewritten (per-partition resume)."""
+    df, n_turns, _ = crashed
+    out = _resume_copy(crashed, tmp_path)
+    before = _bucket_files(out)
+    kept = sorted(before)[:2]
+    _keep_open(spark, out, kept)
+    seen = []
+
+    def spy(transcripts):
+        seen.append(transcripts)
+        return extract_all(transcripts)
+    with monkeypatch.context() as m:
+        m.setattr(run, "extract_all", spy)
+        s = run.run_pipeline(spark, df, out)
+    assert s["resumed"] == kept
+    assert s["n_turns"] == n_turns
+    parts = spark.sparkContext.defaultParallelism * 2
+    bucket = F.pmod(F.hash("conv_id"), F.lit(parts))
+    extracted = {r[0] for r in seen[0].select(bucket).distinct().collect()}
+    assert extracted == set(before) - set(kept)
+    after = _bucket_files(out)
+    assert set(after) == set(before)
+    for b in before:
+        assert (after[b] == before[b]) == (b in kept), b
 
 
 def test_pronoun_coref_nearest_antecedent(spark):
@@ -299,63 +382,87 @@ def test_coref_fanout_bounded_by_window(spark):
     assert got == n
 
 
-def test_extraction_job_heals_torn_bucket_writes(spark, tmp_path):
+def test_extraction_job_heals_torn_bucket_writes(spark, tmp_path, crashed):
     """Crash recovery: files left by a failed attempt in a bucket whose
-    checkpoint row never committed are REPLACED on re-run (dynamic
-    partition overwrite), not appended to."""
-    import shutil
-    from ie_spark.pipeline.graph import run_extraction_job
-    tr, _, _ = corpus_to_pandas(n_convs=20, seed=3)
-    df = transcripts_from_pandas(spark, tr)
-    out = str(tmp_path / "jobheal")
-    run_extraction_job(spark, df, out, n_buckets=4)
-    triples_path = os.path.join(out, "triples")
-    n_clean = spark.read.parquet(triples_path).count()
+    checkpoint row never committed are REPLACED on re-run, not appended
+    to."""
+    df, _, _ = crashed
+    out = _resume_copy(crashed, tmp_path)
+    staged = os.path.join(out, "_extracted")
+    n_clean = spark.read.parquet(staged).count()
     # simulate a torn write: duplicate one bucket's files in place
-    bdir = next(d for d in os.listdir(triples_path)
-                if d.startswith("_bucket="))
-    bpath = os.path.join(triples_path, bdir)
+    torn, *rest = sorted(_bucket_files(out))
+    bpath = os.path.join(staged, f"_bucket={torn}")
     for f in list(os.listdir(bpath)):
         if f.endswith(".parquet"):
             shutil.copy(os.path.join(bpath, f),
                         os.path.join(bpath, "torn-" + f))
-    assert spark.read.parquet(triples_path).count() > n_clean  # corrupted
-    # drop the checkpoints → every bucket reprocesses; overwrite heals
-    shutil.rmtree(os.path.join(out, "_checkpoints"))
-    s = run_extraction_job(spark, df, out, n_buckets=4)
-    assert sorted(s["processed"]) == [0, 1, 2, 3]
-    assert spark.read.parquet(triples_path).count() == n_clean
+    assert spark.read.parquet(staged).count() > n_clean  # corrupted
+    # the torn bucket's row never committed → it alone reprocesses
+    _keep_open(spark, out, rest)
+    s = run.run_pipeline(spark, df, out)
+    assert s["resumed"] == rest
+    assert spark.read.parquet(staged).count() == n_clean
 
 
-def test_extraction_job_clears_stale_files_for_empty_buckets(spark, tmp_path):
-    """ADVICE round-2: dynamic partition overwrite only replaces
-    partitions PRESENT in the new write — a re-processed bucket whose
-    input became empty must still have its torn files dropped, and a
-    fully-empty first run must not crash on read-back schema inference."""
-    import shutil
-    from ie_spark.pipeline.graph import run_extraction_job
-    tr, _, _ = corpus_to_pandas(n_convs=20, seed=3)
-    df = transcripts_from_pandas(spark, tr)
-    out = str(tmp_path / "jobstale")
-    run_extraction_job(spark, df, out, n_buckets=4)
-    triples_path = os.path.join(out, "triples")
-    buckets = sorted(int(d.split("=")[1]) for d in os.listdir(triples_path)
-                     if d.startswith("_bucket="))
-    victim = buckets[0]
-    # drop checkpoints (all buckets reprocess) and feed an input where the
-    # victim bucket has NO rows: its stale directory must disappear
-    shutil.rmtree(os.path.join(out, "_checkpoints"))
-    from ie_spark.pipeline.graph import _bucket_col
-    df_missing = (df.withColumn("_b", _bucket_col(4))
-                  .filter(F.col("_b") != victim).drop("_b"))
-    run_extraction_job(spark, df_missing, out, n_buckets=4)
-    left = [d for d in os.listdir(triples_path)
-            if d == f"_bucket={victim}"]
+def test_extraction_job_clears_stale_files_for_empty_buckets(
+        spark, tmp_path, crashed):
+    """A re-processed bucket whose input became empty must still have its
+    torn files dropped, and a fully-empty first run must not crash on
+    read-back schema inference."""
+    df, _, _ = crashed
+    out = _resume_copy(crashed, tmp_path)
+    victim, *rest = sorted(_bucket_files(out))
+    # the victim bucket's row never committed and it has NO rows now:
+    # its stale directory must disappear
+    _keep_open(spark, out, rest)
+    parts = spark.sparkContext.defaultParallelism * 2
+    df_missing = df.filter(F.pmod(F.hash("conv_id"), F.lit(parts)) != victim)
+    s = run.run_pipeline(spark, df_missing, out)
+    assert s["resumed"] == []  # another input: a fresh extraction
+    left = [b for b in _bucket_files(out) if b == victim]
     assert not left, f"stale bucket dir survived: {left}"
     # fully-empty first run: no crash, all-zero checkpoints
     out2 = str(tmp_path / "jobempty")
-    s = run_extraction_job(spark, df.limit(0), out2, n_buckets=4)
-    assert sorted(s["processed"]) == [0, 1, 2, 3]
+    s = run.run_pipeline(spark, df.limit(0), out2)
+    assert s["resumed"] == [] and s["n_turns"] == 0
+    cp = spark.read.parquet(os.path.join(out2, "_checkpoints")).toPandas()
+    assert sorted(cp.bucket) == [-1] + list(range(parts))
+    assert (cp.n_turns == 0).all()
+
+
+def test_resume_starts_fresh_on_other_input_or_layout(spark, tmp_path,
+                                                       crashed):
+    """Open bucket rows are resumed only by the input and salt layout they
+    were written from: another input, or the same input salted another
+    way, is extracted in full into the same directory."""
+    df, n_turns, _ = crashed
+    tr, gt, _ = corpus_to_pandas(n_convs=20, seed=4)
+    other = transcripts_from_pandas(spark, tr)
+    # another input's extraction crashes after deleting the open buckets'
+    # files: the next call must not resume them either
+    out = _resume_copy(crashed, tmp_path / "torn")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash in extraction")
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(run, "extract_all", crash)
+        with pytest.raises(RuntimeError, match="crash in extraction"):
+            run.run_pipeline(spark, other, out)
+    s = run.run_pipeline(spark, df, out)
+    assert s["resumed"] == [] and s["n_turns"] == n_turns
+    # another input is extracted in full
+    out = _resume_copy(crashed, tmp_path)
+    s = run.run_pipeline(spark, other, out)
+    assert s["resumed"] == [] and s["n_turns"] == len(tr)
+    triples = spark.read.parquet(os.path.join(out, "triples"))
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj"]
+    got = {tuple(r) for r in triples.select(*cols).collect()}
+    assert {tuple(r) for r in gt[cols].itertuples(index=False)} <= got
+    # same input, but salting moves turns between buckets
+    out = _resume_copy(crashed, tmp_path / "salted")
+    s = run.run_pipeline(spark, df, out, salt_threshold=2)
+    assert s["resumed"] == [] and s["n_turns"] == n_turns
 
 
 def test_verbnet_classing(spark):

@@ -2,7 +2,11 @@
 
 import os
 
+import pandas as pd
+import pytest
+
 from ie_spark.data.synthetic import corpus_to_pandas
+from ie_spark.pipeline import graph, run
 from ie_spark.pipeline.extract import transcripts_from_pandas
 from ie_spark.pipeline.run import run_pipeline
 
@@ -36,6 +40,14 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert s2["n_triples"] == s1["n_triples"]
 
 
+def _files_per_bucket(out):
+    """{bucket dir: parquet file count} of a run's ``_extracted`` table."""
+    staged = os.path.join(out, "_extracted")
+    return {d: sum(f.endswith(".parquet")
+                   for f in os.listdir(os.path.join(staged, d)))
+            for d in os.listdir(staged) if d.startswith("_bucket=")}
+
+
 def test_run_pipeline_salts_mega_conversations(spark, tmp_path):
     """North rule: mega-conversations found by the count pre-pass are
     salted across partitions inside run_pipeline."""
@@ -45,6 +57,8 @@ def test_run_pipeline_salts_mega_conversations(spark, tmp_path):
     out = str(tmp_path / "kg_salted")
     s = run_pipeline(spark, df, out, salt_threshold=100)
     assert s["n_turns"] == len(tr)
+    # the bucket follows the salted partitioning too
+    assert set(_files_per_bucket(out).values()) == {1}
     # same P/R contract holds under salted repartition
     triples = spark.read.parquet(os.path.join(out, "triples"))
     got = {tuple(r) for r in
@@ -53,3 +67,84 @@ def test_run_pipeline_salts_mega_conversations(spark, tmp_path):
             gt[["conv_id", "turn_idx", "subj", "pred", "obj"]]
             .itertuples(index=False)}
     assert want <= got
+
+
+def _turns(spark, rows):
+    pdf = pd.DataFrame([(c, t, "user", text, "", None) for c, t, text in rows],
+                       columns=["conv_id", "turn_idx", "role", "text",
+                                "tool", "ts"])
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    pdf["ts"] = pd.Timestamp("2025-01-01")
+    return transcripts_from_pandas(spark, pdf)
+
+
+# The delta makes the alias 'teacher' ambiguous, which relabels Grace's
+# node (edges), and delivers a late earlier turn that changes a pronoun's
+# nearest antecedent (coref).
+BASE = [("c1", 0, "Grace, a teacher, fixed the boy."),
+        ("c1", 1, "The teacher launched the contract."),
+        ("c3", 0, "Alice reviewed the patch."),
+        ("c3", 2, "She approved the request.")]
+DELTA = [("c2", 0, "Henry, a teacher, fixed the dashboard."),
+         ("c3", 1, "Bob merged the patch.")]
+
+
+def test_incremental_ingest_equals_cold_rebuild(spark, tmp_path, kg_tables):
+    """Base then delta into one directory gives the tables of one cold run
+    over the union."""
+    inc, cold = str(tmp_path / "inc"), str(tmp_path / "cold")
+    run_pipeline(spark, _turns(spark, BASE), inc)
+    s = run_pipeline(spark, _turns(spark, DELTA), inc)
+    assert s["resumed"] == []  # a finished run never skips the next input
+    run_pipeline(spark, _turns(spark, BASE + DELTA), cold)
+    got, want = kg_tables(inc), kg_tables(cold)
+    assert got == want
+    coref = spark.read.parquet(os.path.join(inc, "coref"))
+    assert {r.antecedent for r in coref.collect()} == {"Bob"}
+
+
+def test_resume_after_finished_run_counts_only_its_input(
+        spark, tmp_path, monkeypatch, kg_tables):
+    """A delta run that crashed after extraction, on top of a finished base
+    run, resumes its own buckets and counts only its own turns."""
+    inc, cold = str(tmp_path / "inc"), str(tmp_path / "cold")
+    run_pipeline(spark, _turns(spark, BASE), inc)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after extraction")
+    with monkeypatch.context() as m:
+        m.setattr(run, "link_mentions", crash)
+        with pytest.raises(RuntimeError, match="crash after extraction"):
+            run_pipeline(spark, _turns(spark, DELTA), inc)
+    s = run_pipeline(spark, _turns(spark, DELTA), inc)
+    parts = spark.sparkContext.defaultParallelism * 2
+    assert s["resumed"] == list(range(parts))
+    assert s["n_turns"] == len(DELTA)
+    run_pipeline(spark, _turns(spark, BASE + DELTA), cold)
+    assert kg_tables(inc) == kg_tables(cold)
+
+
+def test_extracted_one_file_per_bucket(spark, tmp_path):
+    """The resume bucket is the conv_id repartition's partition, so each
+    extraction task writes one bucket: no more files than buckets."""
+    tr, _, _ = corpus_to_pandas(n_convs=15, seed=33)
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, transcripts_from_pandas(spark, tr), out)
+    files = _files_per_bucket(out)
+    assert files and set(files.values()) == {1}, files
+
+
+def test_run_pipeline_relative_out_dir(spark, tmp_path, monkeypatch):
+    """A relative out_dir resolves against the Python working directory,
+    and no table target is mistaken for an Iceberg table name."""
+    probes = []
+    monkeypatch.setattr(graph, "_iceberg_available",
+                        lambda s: probes.append(s) or False)
+    monkeypatch.chdir(tmp_path)
+    tr, _, _ = corpus_to_pandas(n_convs=5, seed=33)
+    run_pipeline(spark, transcripts_from_pandas(spark, tr), "kg")
+    for t in ("_extracted", "mentions", "triples", "linked", "coref",
+              "nodes", "edges", "_checkpoints"):
+        assert any(f.endswith(".parquet") for _, _, fs in
+                   os.walk(tmp_path / "kg" / t) for f in fs), t
+    assert probes == []
