@@ -19,7 +19,7 @@ turn in, so each extraction task writes one ``_extracted/_bucket=b``
 directory.  A bucket row's lineage names its layout: the bucket count, the
 hot (salted) conversations and a fingerprint of the input's (conv_id,
 turn_idx, text) rows.  A call skips bucket b only if ``_checkpoints``
-holds an ``ok`` row for b with the same ``job_id`` and the same lineage,
+holds an ``ok`` row for b of job ``JOB_ID`` with the same lineage,
 written after that job's last bucket −1 row.  That row is the completion
 row, or the ``discarded`` row a fresh extraction writes before it deletes
 the files of open rows of another layout, so open rows share one layout.
@@ -58,15 +58,17 @@ from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
                                        link_mentions)
 
 MENTION_KEYS = ["mention_id"]
+# the job_id of every _checkpoints row run_pipeline writes and resumes
+JOB_ID = "pipeline"
 
 
-def _open_rows(spark: SparkSession, cp_path: str, job_id: str) -> list:
-    """The ``ok`` bucket rows ``job_id`` wrote after its last bucket −1
+def _open_rows(spark: SparkSession, cp_path: str) -> list:
+    """The ``ok`` bucket rows ``JOB_ID`` wrote after its last bucket −1
     row (a completion or a discard), oldest first."""
     if not (os.path.isdir(cp_path) and os.listdir(cp_path)):
         return []
     rows = sorted(spark.read.parquet(cp_path)
-                  .filter(F.col("job_id") == job_id)
+                  .filter(F.col("job_id") == JOB_ID)
                   .select("bucket", "status", "n_turns", "lineage",
                           "finished_at")
                   .collect(), key=lambda r: r.finished_at)
@@ -83,7 +85,6 @@ def _lineage(parts: int, hot: list[str], fingerprint) -> str:
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                  candidates: DataFrame | None = None,
-                 job_id: str = "pipeline",
                  salt_threshold: int | None = 100_000) -> dict:
     """Full KG construction run.  Idempotent: re-running on the same input
     yields identical tables (fact tables merge on natural keys, derived
@@ -118,7 +119,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                         .cast("decimal(38,0)"))
     # only a crashed run leaves open rows; only then is the input hashed
     # up front, to check it is the input those rows were written from
-    open_rows = _open_rows(spark, cp_path, job_id)
+    open_rows = _open_rows(spark, cp_path)
     done = {}
     if open_rows:
         lineage = _lineage(parts, hot, transcripts.agg(fingerprint).first()[0])
@@ -136,7 +137,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
             # close the open rows before their files go, so a crash in
             # this extraction cannot make a later call resume them
             write_checkpoints(spark, cp_path, [
-                (job_id, -1, "discarded", 0, 0, 0, lineage)])
+                (JOB_ID, -1, "discarded", 0, 0, 0, lineage)])
         for d in ([os.path.join(staged, f"_bucket={b}") for b in todo]
                   if done else [staged]):
             shutil.rmtree(d, ignore_errors=True)
@@ -157,7 +158,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         n, t = turns.get, facts.get
         lineage = _lineage(parts, hot, n.pop("fp"))
         write_checkpoints(spark, cp_path, [
-            (job_id, b, "ok", n[f"b{b}"], t[f"b{b}"], wall_ms, lineage)
+            (JOB_ID, b, "ok", n[f"b{b}"], t[f"b{b}"], wall_ms, lineage)
             for b in todo])
         n_turns += sum(n.values())
     combined = spark.read.schema(COMBINED_SCHEMA).parquet(staged)
@@ -197,7 +198,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
      .write.mode("overwrite").parquet(os.path.join(out_dir, "edges")))
 
     stats = {
-        "job_id": job_id,
         "n_turns": n_turns,
         "n_mentions": mentions.count(),
         "n_triples": triples.count(),
@@ -207,7 +207,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         "wall_s": round(time.time() - t0, 2),
     }
     write_checkpoints(spark, cp_path,
-                      [(job_id, -1, "ok", stats["n_turns"], stats["n_triples"],
+                      [(JOB_ID, -1, "ok", stats["n_turns"], stats["n_triples"],
                         int(stats["wall_s"] * 1000),
                         f"run_pipeline:v1:{out_dir}")])
     return stats

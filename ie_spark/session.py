@@ -154,6 +154,22 @@ def warm_session(spark: SparkSession) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def package_zip(path: str) -> str:
+    """Write every ``ie_spark/**/*.py`` into the zip at ``path``, named
+    relative to the repo root so ``import ie_spark`` works from the zip;
+    returns ``path``."""
+    import zipfile
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    with zipfile.ZipFile(path, "w") as z:
+        for r, _, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(r, f)
+                    z.write(full, os.path.relpath(full, root))
+    return path
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make the ie_spark package importable on executors (addPyFile zip).
 
@@ -167,18 +183,8 @@ def ship_package(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     import tempfile
-    import zipfile
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(),
-                         f"ie_spark_pkg_{os.getpid()}.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for r, _, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(r, f)
-                    z.write(full, os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(package_zip(os.path.join(
+        tempfile.gettempdir(), f"ie_spark_pkg_{os.getpid()}.zip")))
     _SHIPPED.add(key)
 
 

@@ -1,9 +1,10 @@
 """Scaling-efficiency evidence (north rule: throughput efficiency ≥ 0.8 from
 N to 4N executors; sandbox proxy = local[8] vs local[32]).
 
-Packages ie_spark as a zip, launches scripts/kg_job.py twice via
-``spark-submit --py-files`` at the two parallelism levels on identical
-input, and writes the throughputs + efficiency to BENCH_SCALING.md.
+Packages ie_spark as a zip (``session.package_zip``), launches
+scripts/kg_job.py twice via ``spark-submit --py-files`` at the two
+parallelism levels on identical input, and writes the throughputs +
+efficiency to BENCH_SCALING.md.
 """
 
 from __future__ import annotations
@@ -14,20 +15,11 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def make_zip(tmp: str) -> str:
-    zpath = os.path.join(tmp, "ie_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _, files in os.walk(os.path.join(REPO, "ie_spark")):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, REPO))
-    return zpath
+from ie_spark.session import package_zip  # noqa: E402
 
 
 def run_level(cores: int, zpath: str, tmp: str, convs: int) -> dict:
@@ -54,7 +46,7 @@ def main() -> None:
     pairs = [(2, 8), (8, 32)]
     results = []
     with tempfile.TemporaryDirectory() as tmp:
-        zpath = make_zip(tmp)
+        zpath = package_zip(os.path.join(tmp, "ie_spark.zip"))
         for lo, hi in pairs:
             r_lo = run_level(lo, zpath, tmp, convs)
             r_hi = run_level(hi, zpath, tmp, convs)

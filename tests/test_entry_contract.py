@@ -130,3 +130,18 @@ def test_driver_contract_from_foreign_cwd(tmp_path, sf_dir):
                            "kg_constituents"}
     assert int(counts["media_features"]) == 48
     assert int(counts["kg_constituents"]) > 0
+
+
+def test_package_zip_holds_every_module(tmp_path):
+    """The shipped zip is every ``ie_spark/**/*.py``, named relative to the
+    repo root, and nothing else."""
+    import glob
+    import zipfile
+
+    from ie_spark.session import package_zip
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = package_zip(str(tmp_path / "pkg.zip"))
+    want = {os.path.relpath(p, repo) for p in glob.glob(
+        os.path.join(repo, "ie_spark", "**", "*.py"), recursive=True)}
+    names = zipfile.ZipFile(path).namelist()
+    assert len(names) == len(want) and set(names) == want
