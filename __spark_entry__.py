@@ -45,7 +45,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 from ie_spark.operators.partitioning import adaptive_fan_out  # noqa: E402
-from ie_spark.session import ship_package  # noqa: E402
+from ie_spark.session import local_frame, ship_package  # noqa: E402
 
 _TABLE_CACHE: dict = {}
 
@@ -202,9 +202,9 @@ def _kg_labels(spark):
 
 def _q_kg_nodes(spark, sf_dir):
     from ie_spark.pipeline.canonicalize import canonical_nodes
-    from ie_spark.pipeline.linking import kb_metadata
+    from ie_spark.pipeline.linking import kb_frame
     linked, _, labels = _kg_labels(spark)
-    return canonical_nodes(labels, linked, kb=kb_metadata(spark))
+    return canonical_nodes(labels, linked, kb_frame(spark))
 
 
 def _q_kg_edges(spark, sf_dir):
@@ -556,8 +556,8 @@ def _q_events_intervals(spark, sf_dir):
             .select("user_id",
                     F.col("session_window.start").alias("s_start"),
                     F.col("session_window.end").alias("s_end")))
-    wins = spark.createDataFrame(
-        MAINT_WINDOWS, "win_id string, w_start string, w_end string"
+    wins = local_frame(
+        spark, MAINT_WINDOWS, "win_id string, w_start string, w_end string"
     ).select("win_id",
              F.col("w_start").cast("timestamp_ntz").alias("w_start"),
              F.col("w_end").cast("timestamp_ntz").alias("w_end"))
@@ -685,8 +685,8 @@ def _q_doc_lang_id_multi(spark, sf_dir):
     from ie_spark.operators.textstats import lang_id_multi
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
-    planted = spark.createDataFrame([(s, t) for s, _, t in LANG_SAMPLES],
-                                    "doc_id string, text string")
+    planted = local_frame(spark, [(s, t) for s, _, t in LANG_SAMPLES],
+                          "doc_id string, text string")
     return (d.unionByName(planted)
             .select("doc_id", lang_id_multi().alias("lang_guess")))
 
@@ -701,8 +701,7 @@ def _q_doc_markup_strip(spark, sf_dir):
     from ie_spark.operators.textstats import markup_strip
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
-    planted = spark.createDataFrame(MARKUP_SAMPLES,
-                                    "doc_id string, text string")
+    planted = local_frame(spark, MARKUP_SAMPLES, "doc_id string, text string")
     return markup_strip(d.unionByName(planted))
 
 
@@ -717,8 +716,7 @@ def _q_doc_url_domains(spark, sf_dir):
     from ie_spark.operators.textstats import url_domain_stats
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
-    planted = spark.createDataFrame(URL_SAMPLES,
-                                    "doc_id string, text string")
+    planted = local_frame(spark, URL_SAMPLES, "doc_id string, text string")
     return url_domain_stats(d.unionByName(planted))
 
 
@@ -772,8 +770,7 @@ def _q_doc_line_dedup(spark, sf_dir):
     from ie_spark.operators.dedup import line_dedup
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
-    planted = spark.createDataFrame(LINE_SAMPLES,
-                                    "doc_id string, text string")
+    planted = local_frame(spark, LINE_SAMPLES, "doc_id string, text string")
     return line_dedup(d.unionByName(planted))
 
 
@@ -1140,8 +1137,8 @@ def _q_doc_pii_scrub(spark, sf_dir):
     from ie_spark.operators.textstats import pii_scrub
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", "text")
-            .unionByName(spark.createDataFrame(
-                _PII_FIXTURE, "doc_id long, text string")))
+            .unionByName(local_frame(
+                spark, _PII_FIXTURE, "doc_id long, text string")))
     return pii_scrub(docs)
 
 

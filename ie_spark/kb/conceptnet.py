@@ -177,6 +177,8 @@ def conceptnet_edges(spark, terms_df, term_col: str = "term",
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from ie_spark.session import local_frame
+
     the_fetch = fetch if fetch is not None else http_fetch
     # collapse spelling variants BEFORE distinct so the shuffle dedupes
     # them; \s covers tabs/newlines that F.trim (ASCII space only)
@@ -213,4 +215,4 @@ def conceptnet_edges(spark, terms_df, term_col: str = "term",
         T.StructField("edge_id", T.StringType()),
         T.StructField("surface_text", T.StringType()),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ie_spark.kb.verbnet_data import verb_class_map
+from ie_spark.session import local_frame
 
 
 def verb_class_df(spark: SparkSession) -> DataFrame:
@@ -22,8 +23,9 @@ def verb_class_df(spark: SparkSession) -> DataFrame:
     (deterministic tie-break; the reference keeps the full list in its
     name index — exposed here via ``verb_classes`` when needed)."""
     rows = [(v, cs[0], cs) for v, cs in sorted(verb_class_map().items())]
-    return spark.createDataFrame(
-        rows, "verb string, verb_class string, verb_classes array<string>")
+    return local_frame(
+        spark, rows,
+        "verb string, verb_class string, verb_classes array<string>")
 
 
 def with_verb_classes(edges: DataFrame, classes: DataFrame,

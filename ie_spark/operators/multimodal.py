@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ie_spark.session import local_frame
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("kind", StringType()),          # image|audio|video
@@ -163,20 +165,5 @@ def expected_media_features(n: int = 64) -> list[tuple]:
 
 
 def make_synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for tests (payload = seeded bytes).
-
-    Built through the Arrow pandas path: a list-of-tuples
-    ``createDataFrame`` becomes a pickled-row PythonRDD source — an extra
-    Python evaluation stage (defaultParallelism near-empty slices, one
-    worker round trip each) in front of the real mapInPandas consumer.
-    The Arrow path serializes the 48 rows on the driver into Arrow
-    batches, so the source is a plain JVM scan (guide §6 'Arrow for
-    driver transfers'; measured 1.15→0.39 s cold at sf0.1).  Row content
-    is unchanged.  Object columns keep Python ints and None as they are,
-    so the frame also converts when Arrow is off (a float+NaN or nullable
-    Int32 column reaches the row path as floats, which IntegerType
-    rejects)."""
-    pdf = pd.DataFrame(synthetic_media_rows(n), dtype=object,
-                       columns=[f.name for f in MEDIA_SCHEMA.fields])
-    pdf["payload"] = pdf["payload"].map(bytes)
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
+    """Deterministic fake media table for tests (payload = seeded bytes)."""
+    return local_frame(spark, synthetic_media_rows(n), MEDIA_SCHEMA)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ie_spark.pipeline.linking import kb_url
+
 
 def build_identity_edges(linked_mentions: DataFrame,
                          triples: DataFrame) -> DataFrame:
@@ -124,17 +126,17 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
 
 
 def canonical_nodes(labels: DataFrame, linked_mentions: DataFrame,
-                    kb: DataFrame | None = None) -> DataFrame:
-    """components + mention metadata → nodes(node_id, canonical, kind,
-    entity_id, kb_url[, entity_name, category, pageid]).
+                    kb: DataFrame) -> DataFrame:
+    """components + mention metadata + KB → nodes(node_id, canonical, kind,
+    entity_id, kb_url, entity_name, category, pageid).
 
     node_id = component representative (min node key; 'E:' sorts before
     'M:', so a component containing a KB entity is represented by its
     smallest entity id — exposed as entity_id/kb_url metadata, mirroring
     the reference's wikidata attachment, core/sentence.py:30-63);
-    canonical = the (deterministically smallest) mention stem.  When a
-    ``kb`` frame (entity_id, entity_name, category, pageid) is supplied,
-    the full payload joins on (broadcast — the KB is dimension-sized).
+    canonical = the (deterministically smallest) mention stem.  ``kb`` is
+    ``linking.kb_frame``: its name, category and pageid join on entity_id
+    (broadcast — the KB is dimension-sized).
     """
     stems = (linked_mentions
              .select(F.concat(F.lit("M:"), F.col("stem")).alias("node"),
@@ -143,19 +145,17 @@ def canonical_nodes(labels: DataFrame, linked_mentions: DataFrame,
     joined = labels.join(stems, "node", "left")
     ent = F.when(F.col("component").startswith("E:"),
                  F.expr("substring(component, 3)"))
-    nodes = (joined.groupBy("component")
-             .agg(F.min("stem").alias("canonical"),
-                  F.max("kind").alias("kind"))
-             .select(F.col("component").alias("node_id"), "canonical",
-                     "kind", ent.alias("entity_id"),
-                     F.when(ent.isNotNull(),
-                            F.concat(F.lit("kb://entity/"), ent))
-                     .alias("kb_url")))
-    if kb is not None:
-        nodes = nodes.join(F.broadcast(kb), "entity_id", "left").select(
-            "node_id", "canonical", "kind", "entity_id", "kb_url",
-            "entity_name", "category", "pageid")
-    return nodes
+    meta = kb.select("entity_id", F.col("name").alias("entity_name"),
+                     "category", "pageid")
+    return (joined.groupBy("component")
+            .agg(F.min("stem").alias("canonical"),
+                 F.max("kind").alias("kind"))
+            .select(F.col("component").alias("node_id"), "canonical",
+                    "kind", ent.alias("entity_id"),
+                    kb_url(ent).alias("kb_url"))
+            .join(F.broadcast(meta), "entity_id", "left")
+            .select("node_id", "canonical", "kind", "entity_id", "kb_url",
+                    "entity_name", "category", "pageid"))
 
 
 def canonical_mention_map(labels: DataFrame) -> DataFrame:

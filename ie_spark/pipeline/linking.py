@@ -2,6 +2,10 @@
 dictionary (north rule; replaces the reference's live wikipedia/google
 search, ``semantics/ccg.py:1919-1994`` / ``core/sentence.py:915-1000``).
 
+The KB is one local frame, ``kb_frame``: the candidate dictionary
+explodes its aliases, and ``canonicalize.canonical_nodes`` takes the node
+metadata from it.
+
 Plan shape:
   mentions (big)  ⋈broadcast  candidates (small, exploded aliases)
       on block_key (normalized first token)           ← equi-join, no shuffle
@@ -17,11 +21,16 @@ build time.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ie_spark.data.synthetic import CITIES, NAMES, NOUNS
+from ie_spark.session import local_frame
+
+KB_SCHEMA = ("entity_id string, name string, aliases array<string>, "
+             "category string, pageid int")
+MIN_SCORE = 0.5
 
 
 def _block_key(col):
@@ -54,42 +63,36 @@ def build_candidate_rows() -> list[tuple[str, str, list[str], str, int]]:
     return rows
 
 
-def kb_metadata(spark: SparkSession) -> DataFrame:
-    """(entity_id, entity_name, category, pageid) — the KB payload joined
-    onto canonical nodes (reference core/sentence.py:30-63 shape)."""
-    rows = [(eid, name, cat, pid)
-            for (eid, name, _aliases, cat, pid) in build_candidate_rows()]
-    return spark.createDataFrame(
-        rows, "entity_id string, entity_name string, category string, "
-              "pageid int")
+def kb_url(entity_id: Column) -> Column:
+    """An entity's KB URL (the reference's wikidata url slot)."""
+    return F.concat(F.lit("kb://entity/"), entity_id)
 
 
-def build_candidate_dict(spark: SparkSession,
-                         extra: list[tuple[str, str, list[str]]] | None = None
-                         ) -> DataFrame:
+def kb_frame(spark: SparkSession) -> DataFrame:
+    """The KB, one row per entity, as a local frame (``KB_SCHEMA``)."""
+    return local_frame(spark, build_candidate_rows(), KB_SCHEMA)
+
+
+def build_candidate_dict(spark: SparkSession) -> DataFrame:
     """Deterministic KB candidate dictionary (entity_id, name, alias,
-    block_key) — one row per alias.  Built from the synthetic vocabulary
-    plus distractors (FIXTURES.md §4); swap for a real KB table at scale.
+    block_key, alias_norm) — one row per alias of ``kb_frame``.
+    Built from the synthetic vocabulary plus distractors (FIXTURES.md §4);
+    swap for a real KB table at scale.
     """
-    rows = [r[:3] for r in build_candidate_rows()]
-    rows.extend(extra or [])
-    df = spark.createDataFrame(rows, "entity_id string, name string, aliases array<string>")
-    return (df.select("entity_id", "name", F.explode("aliases").alias("alias"))
-              .withColumn("block_key", _block_key(F.col("alias")))
-              .withColumn("alias_norm", F.lower(F.regexp_replace("alias", "-", " ")))
-              # KB metadata carried onto linked mentions (reference attaches
-              # wikidata title/pageid/url, core/sentence.py:30-63)
-              .withColumn("kb_url", F.concat(F.lit("kb://entity/"),
-                                             F.col("entity_id"))))
+    return (kb_frame(spark)
+            .select("entity_id", "name", F.explode("aliases").alias("alias"))
+            .withColumn("block_key", _block_key(F.col("alias")))
+            .withColumn("alias_norm",
+                        F.lower(F.regexp_replace("alias", "-", " "))))
 
 
-def link_mentions(mentions: DataFrame, candidates: DataFrame,
-                  min_score: float = 0.5) -> DataFrame:
+def link_mentions(mentions: DataFrame, candidates: DataFrame) -> DataFrame:
     """mentions × broadcast candidates → (mention cols, entity_id, score).
 
     Score: 1.0 exact alias match, else longest-common-prefix ratio
     (computed JVM-side via levenshtein on truncated strings — no UDF).
-    Top-1 per mention_id via row_number.
+    Top-1 per mention_id via row_number; below ``MIN_SCORE`` the
+    mention keeps no entity.
     """
     m = (mentions
          .filter(F.col("kind").isin("entity", "propername"))
@@ -123,18 +126,10 @@ def link_mentions(mentions: DataFrame, candidates: DataFrame,
         F.desc_nulls_last("score"), F.asc("entity_id"))
     top = (j.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1).drop("rn"))
-    return (top.withColumn(
-                "entity_id",
-                F.when(F.col("score") >= min_score, F.col("entity_id")))
-               .withColumn(
-                "score",
-                F.when(F.col("entity_id").isNotNull(), F.col("score")))
-               .withColumn(
-                "entity_name",
-                F.when(F.col("entity_id").isNotNull(), F.col("name")))
-               .withColumn(
-                "kb_url",
-                F.when(F.col("entity_id").isNotNull(), F.col("kb_url")))
-               .select("conv_id", "turn_idx", "sent_idx", "mention_id",
-                       "surface", "stem", "kind", "ref", "entity_id", "score",
-                       "entity_name", "kb_url"))
+    hit = F.col("score") >= MIN_SCORE
+    return top.select(
+        "conv_id", "turn_idx", "sent_idx", "mention_id", "surface", "stem",
+        "kind", "ref", F.when(hit, F.col("entity_id")).alias("entity_id"),
+        F.when(hit, F.col("score")).alias("score"),
+        F.when(hit, F.col("name")).alias("entity_name"),
+        F.when(hit, kb_url(F.col("entity_id"))).alias("kb_url"))

@@ -9,8 +9,8 @@ This is the single entry point a user of the reference would switch to:
 
 Produces parquet dirs under ``os.path.abspath(out)``:
     _extracted   one extraction pass, partitioned by ``_bucket``
-    mentions  triples  linked    fact tables, merged on their keys
-    coref  nodes  edges          derived tables, recomputed and replaced
+    mentions  triples            fact tables, merged on their keys
+    linked  coref  nodes  edges  derived tables, recomputed and replaced
     _checkpoints                 one ``ok`` row per bucket, one per run
                                  (bucket −1), see the resume rule
 
@@ -54,7 +54,7 @@ from ie_spark.pipeline.extract import (
     split_combined,
 )
 from ie_spark.pipeline.graph import merge_upsert, write_checkpoints
-from ie_spark.pipeline.linking import (build_candidate_dict, kb_metadata,
+from ie_spark.pipeline.linking import (build_candidate_dict, kb_frame,
                                        link_mentions)
 
 MENTION_KEYS = ["mention_id"]
@@ -84,12 +84,11 @@ def _lineage(parts: int, hot: list[str], fingerprint) -> str:
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
-                 candidates: DataFrame | None = None,
                  salt_threshold: int | None = 100_000) -> dict:
     """Full KG construction run.  Idempotent: re-running on the same input
     yields identical tables (fact tables merge on natural keys, derived
     tables are rebuilt from them), and base-then-delta equals one run over
-    the union.
+    the union with the KB of the last run.
 
     Partitioning (north rule): the input is explicitly hash-repartitioned
     by conv_id; conversations exceeding ``salt_threshold`` turns (found by
@@ -171,16 +170,15 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     mentions = spark.read.parquet(os.path.join(out_dir, "mentions"))
     triples = spark.read.parquet(os.path.join(out_dir, "triples"))
 
-    # 2. entity linking (broadcast blocked similarity join)
-    candidates = candidates or build_candidate_dict(spark)
-    linked = link_mentions(mentions, candidates)
-    merge_upsert(spark, linked, os.path.join(out_dir, "linked"),
-                 keys=MENTION_KEYS)
+    # 2. entity linking (broadcast blocked similarity join), one row per
+    #    mention_id.  Derived tables are rebuilt from the full fact tables
+    #    and replaced: a KB change can change a link, a late earlier turn
+    #    an antecedent, a new alias a node label.
+    link_mentions(mentions, build_candidate_dict(spark)).write.mode(
+        "overwrite").parquet(os.path.join(out_dir, "linked"))
     linked = spark.read.parquet(os.path.join(out_dir, "linked"))
 
-    # 2b. cross-sentence pronoun resolution (nearest-antecedent).  Derived
-    #     tables are rebuilt from the full fact tables and replaced: a late
-    #     earlier turn can change an antecedent, a new alias a node label.
+    # 2b. cross-sentence pronoun resolution (nearest-antecedent)
     from ie_spark.pipeline.coref import resolve_pronouns
     (resolve_pronouns(mentions)
      .dropDuplicates(["conv_id", "turn_idx", "sent_idx", "pronoun"])
@@ -188,7 +186,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
 
     # 3. canonicalization (connected components over mention–entity + _AKA)
     labels = connected_components(build_identity_edges(linked, triples))
-    nodes = canonical_nodes(labels, linked, kb=kb_metadata(spark))
+    nodes = canonical_nodes(labels, linked, kb_frame(spark))
     nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
 
     # 4. edge materialization with canonical endpoints

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _SHIPPED: set[str] = set()
 _WARMED: set[str] = set()
@@ -152,6 +152,22 @@ def warm_session(spark: SparkSession) -> None:
         pass
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples) → a DataFrame of ``schema`` (DDL or
+    ``StructType``).  The rows go in as a ``pyarrow.Table`` of that
+    schema's Arrow types, which plans as a ``LocalTableScan`` with Arrow on
+    or off: no ``parallelize`` stage pickles them through Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.table(dict(zip(arrow.names, cols)), schema=arrow), schema)
 
 
 def package_zip(path: str) -> str:

@@ -25,7 +25,8 @@ from ie_spark.pipeline.extract import (
     transcripts_from_pandas,
 )
 from ie_spark.pipeline.graph import merge_upsert, write_checkpoints
-from ie_spark.pipeline.linking import build_candidate_dict, link_mentions
+from ie_spark.pipeline.linking import (build_candidate_dict, kb_frame,
+                                       link_mentions)
 
 
 @pytest.fixture(scope="module")
@@ -156,7 +157,7 @@ def test_canonicalization_end_to_end(spark, small):
     linked = link_mentions(mentions, cand)
     edges = build_identity_edges(linked, triples)
     labels = connected_components_star(edges)
-    nodes = canonical_nodes(labels, linked)
+    nodes = canonical_nodes(labels, linked, kb_frame(spark))
     assert nodes.count() == labels.select("component").distinct().count()
     mmap = canonical_mention_map(labels)
     # every mention stem that links resolves to exactly one node_id

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from ie_spark.data.synthetic import corpus_to_pandas
-from ie_spark.pipeline import graph, run
+from ie_spark.pipeline import graph, linking, run
 from ie_spark.pipeline.extract import transcripts_from_pandas
 from ie_spark.pipeline.run import run_pipeline
 
@@ -101,6 +101,25 @@ def test_incremental_ingest_equals_cold_rebuild(spark, tmp_path, kg_tables):
     assert got == want
     coref = spark.read.parquet(os.path.join(inc, "coref"))
     assert {r.antecedent for r in coref.collect()} == {"Bob"}
+
+
+def test_kb_change_between_runs_equals_cold_rebuild(
+        spark, tmp_path, monkeypatch, kg_tables):
+    """A base run against a KB without Alice, then a delta against the full
+    KB, gives the tables of one cold run over the union with the full KB:
+    the base's links to the near-miss 'Alicia' do not survive."""
+    inc, cold = str(tmp_path / "inc"), str(tmp_path / "cold")
+    full = linking.build_candidate_rows()
+    with monkeypatch.context() as m:
+        m.setattr(linking, "build_candidate_rows",
+                  lambda: [r for r in full if r[1] != "Alice"])
+        run_pipeline(spark, _turns(spark, BASE), inc)
+    linked = spark.read.parquet(os.path.join(inc, "linked"))
+    assert {r.entity_name for r in linked.filter("stem = 'Alice'")
+            .collect()} == {"Alicia"}
+    run_pipeline(spark, _turns(spark, DELTA), inc)
+    run_pipeline(spark, _turns(spark, BASE + DELTA), cold)
+    assert kg_tables(inc) == kg_tables(cold)
 
 
 def test_resume_after_finished_run_counts_only_its_input(
