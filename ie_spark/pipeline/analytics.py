@@ -29,25 +29,20 @@ they hold at 10^12-turn scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ie_spark.pipeline.graph import replace_table
 
-def degree_profile(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
+
+def degree_profile(edges: DataFrame) -> DataFrame:
     """edges(src, dst, ...) → one row per node with degree counts.
 
     Columns: node, out_degree, out_neighbors, in_degree, in_neighbors,
-    total_degree.
+    total_degree.  Both aggregations read ``edges``: callers hand in a
+    pinned frame (a lazy local checkpoint), so its lineage runs once.
     """
-    # both endpoint aggregations consume the projection; a lazy local
-    # checkpoint runs the upstream lineage once (line_dedup pattern —
-    # the two exchanges have different children, so no ReusedExchange).
-    # checkpoint=False when the caller already pinned the projection
-    # (run_graph_analytics) — a second checkpoint would materialize an
-    # identical copy of the endpoint list in block storage
     edges = edges.select("src", "dst")
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
     out_d = (edges.groupBy(F.col("src").alias("node"))
              .agg(F.count("*").alias("out_degree"),
                   F.countDistinct("dst").alias("out_neighbors")))
@@ -330,8 +325,8 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
     a KG consumer schedules after each pipeline run.  Outputs are
     unsorted (a global output sort buys nothing for a table handed to
     downstream jobs).  Per-pass stats come back as a dict for the caller's
-    JSON line: ``rows`` is counted by an observation on the pass's own
-    write (no read-back job), ``sec`` is the pass's wall seconds.
+    JSON line: ``rows`` is what ``replace_table`` counted on the pass's
+    own write (no read-back job), ``sec`` is the pass's wall seconds.
     """
     import os as _os
     import time as _time
@@ -341,7 +336,7 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
     # each runner looks its function up when it runs, so a caller that
     # wraps a pass (a tracer patching the module attribute) sees it
     runners = {
-        "degree": lambda e: degree_profile(e, checkpoint=False),
+        "degree": lambda e: degree_profile(e),
         "two_hop": lambda e: two_hop_paths(e, max_fanout=max_fanout),
         "triangles": lambda e: triangle_counts(e),
         "pagerank": lambda e: pagerank_mass(e, iterations=iterations),
@@ -360,13 +355,7 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
     stats: dict = {"passes": {}}
     for name in passes:
         t0 = _time.time()
-        out = runners[name](e)
-        path = _os.path.join(out_dir, name)
-        rows = Observation()
-        (out.observe(rows, F.count(F.lit(1)).alias("n"))
-         .write.mode("overwrite").parquet(path))
-        stats["passes"][name] = {
-            "rows": int(rows.get["n"]),
-            "sec": round(_time.time() - t0, 3),
-        }
+        rows = replace_table(runners[name](e), _os.path.join(out_dir, name))
+        stats["passes"][name] = {"rows": rows,
+                                 "sec": round(_time.time() - t0, 3)}
     return stats

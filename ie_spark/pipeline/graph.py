@@ -1,5 +1,5 @@
-"""Graph materialization: idempotent merge of fact tables, plus the
-checkpoint/lineage rows ``pipeline.run.run_pipeline`` resumes from.
+"""Graph materialization: fact-table merges, derived-table overwrites and
+the checkpoint/lineage rows ``pipeline.run.run_pipeline`` resumes from.
 
 The reference's sink is S3 JSON + SQS at-least-once with content-hash dedup
 (``marbles/aws/__init__.py:115-254``); the Spark-native equivalent is
@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ie_spark.session import local_frame
@@ -57,6 +57,15 @@ def merge_upsert(spark: SparkSession, df: DataFrame, target: str,
         new_rows.write.mode("append").parquet(target)
     else:
         df.dropDuplicates(keys).write.mode("overwrite").parquet(target)
+
+
+def replace_table(df: DataFrame, path: str) -> int:
+    """Overwrite the parquet table at ``path`` with ``df``; return the rows
+    written, counted by an observation on the write job itself."""
+    rows = Observation()
+    (df.observe(rows, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").parquet(path))
+    return int(rows.get["n"])
 
 
 def write_checkpoints(spark: SparkSession, checkpoint_path: str,

@@ -8,7 +8,8 @@ This is the single entry point a user of the reference would switch to:
     stats = run_pipeline(spark, transcripts_df, "/warehouse/kg")
 
 Produces parquet dirs under ``os.path.abspath(out)``:
-    _extracted   one extraction pass, partitioned by ``_bucket``
+    _extracted   one extraction pass, partitioned by ``_bucket``; only
+                 while a run is open (deleted after its completion row)
     mentions  triples            fact tables, merged on their keys
     linked  coref  nodes  edges  derived tables, recomputed and replaced
     _checkpoints                 one ``ok`` row per bucket, one per run
@@ -35,6 +36,7 @@ import hashlib
 import os
 import shutil
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -47,13 +49,16 @@ from ie_spark.pipeline.canonicalize import (
 )
 from ie_spark.pipeline.extract import (
     COMBINED_SCHEMA,
+    MENTION_SCHEMA,
     TRIPLE_KEYS,
+    TRIPLE_SCHEMA,
     conv_keys,
     extract_all,
     find_hot_convs,
     split_combined,
 )
-from ie_spark.pipeline.graph import merge_upsert, write_checkpoints
+from ie_spark.pipeline.graph import (merge_upsert, replace_table,
+                                     write_checkpoints)
 from ie_spark.pipeline.linking import (build_candidate_dict, kb_frame,
                                        link_mentions)
 
@@ -105,8 +110,8 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     t0 = time.time()
     out_dir = os.path.abspath(out_dir)
     os.makedirs(out_dir, exist_ok=True)
-    staged = os.path.join(out_dir, "_extracted")
-    cp_path = os.path.join(out_dir, "_checkpoints")
+    table = partial(os.path.join, out_dir)
+    staged, cp_path = table("_extracted"), table("_checkpoints")
 
     parts = spark.sparkContext.defaultParallelism * 2
     hot = ([] if salt_threshold is None
@@ -163,49 +168,48 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     combined = spark.read.schema(COMBINED_SCHEMA).parquet(staged)
     mentions, triples = split_combined(combined)
 
-    merge_upsert(spark, mentions, os.path.join(out_dir, "mentions"),
-                 keys=MENTION_KEYS)
-    merge_upsert(spark, triples, os.path.join(out_dir, "triples"),
-                 keys=TRIPLE_KEYS)
-    mentions = spark.read.parquet(os.path.join(out_dir, "mentions"))
-    triples = spark.read.parquet(os.path.join(out_dir, "triples"))
+    merge_upsert(spark, mentions, table("mentions"), keys=MENTION_KEYS)
+    merge_upsert(spark, triples, table("triples"), keys=TRIPLE_KEYS)
+    # read back with the written schemas: no footer-inference job
+    mentions = spark.read.schema(MENTION_SCHEMA).parquet(table("mentions"))
+    triples = spark.read.schema(TRIPLE_SCHEMA).parquet(table("triples"))
 
     # 2. entity linking (broadcast blocked similarity join), one row per
     #    mention_id.  Derived tables are rebuilt from the full fact tables
     #    and replaced: a KB change can change a link, a late earlier turn
     #    an antecedent, a new alias a node label.
-    link_mentions(mentions, build_candidate_dict(spark)).write.mode(
-        "overwrite").parquet(os.path.join(out_dir, "linked"))
-    linked = spark.read.parquet(os.path.join(out_dir, "linked"))
+    linked = link_mentions(mentions, build_candidate_dict(spark))
+    replace_table(linked, table("linked"))
+    linked = spark.read.schema(linked.schema).parquet(table("linked"))
 
     # 2b. cross-sentence pronoun resolution (nearest-antecedent)
     from ie_spark.pipeline.coref import resolve_pronouns
-    (resolve_pronouns(mentions)
-     .dropDuplicates(["conv_id", "turn_idx", "sent_idx", "pronoun"])
-     .write.mode("overwrite").parquet(os.path.join(out_dir, "coref")))
+    replace_table(resolve_pronouns(mentions).dropDuplicates(
+        ["conv_id", "turn_idx", "sent_idx", "pronoun"]), table("coref"))
 
     # 3. canonicalization (connected components over mention–entity + _AKA)
     labels = connected_components(build_identity_edges(linked, triples))
-    nodes = canonical_nodes(labels, linked, kb_frame(spark))
-    nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
+    n_nodes = replace_table(canonical_nodes(labels, linked, kb_frame(spark)),
+                            table("nodes"))
 
     # 4. edge materialization with canonical endpoints
-    (canonical_edges(triples, labels)
-     .dropDuplicates(["src", "pred", "dst", "conv_id", "turn_idx",
-                      "sent_idx", "polarity"])
-     .write.mode("overwrite").parquet(os.path.join(out_dir, "edges")))
+    edges = canonical_edges(triples, labels).dropDuplicates(
+        ["src", "pred", "dst", "conv_id", "turn_idx", "sent_idx", "polarity"])
+    n_edges = replace_table(edges, table("edges"))
 
     stats = {
         "n_turns": n_turns,
         "n_mentions": mentions.count(),
         "n_triples": triples.count(),
-        "n_nodes": spark.read.parquet(os.path.join(out_dir, "nodes")).count(),
-        "n_edges": spark.read.parquet(os.path.join(out_dir, "edges")).count(),
+        "n_nodes": n_nodes,
+        "n_edges": n_edges,
         "resumed": sorted(done),
         "wall_s": round(time.time() - t0, 2),
     }
+    # the completion row first, so no open row outlives its files
     write_checkpoints(spark, cp_path,
                       [(JOB_ID, -1, "ok", stats["n_turns"], stats["n_triples"],
                         int(stats["wall_s"] * 1000),
                         f"run_pipeline:v1:{out_dir}")])
+    shutil.rmtree(staged, ignore_errors=True)
     return stats

@@ -206,7 +206,6 @@ def ship_package(spark: SparkSession) -> None:
 
 def get_spark(app_name: str = "ie_spark",
               master: str | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
@@ -214,8 +213,8 @@ def get_spark(app_name: str = "ie_spark",
     - Arrow on + bounded batch size: the extraction UDFs are Arrow pandas
       UDFs; 10k rows/batch keeps Python worker memory flat regardless of
       input split size.
-    - shuffle partitions default to 2× cores locally; on a real cluster set
-      it (or rely on AQE coalescing from a high initial number).
+    - shuffle partitions are max(2× cores, 8); on a real cluster set them
+      in ``extra_conf`` (or rely on AQE coalescing from a high number).
     - the ie_spark package is shipped to the executors (``ship_package``).
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") \
@@ -224,8 +223,6 @@ def get_spark(app_name: str = "ie_spark",
     if master.startswith("local["):
         inner = master[6:-1]
         cores = os.cpu_count() if inner == "*" else int(inner)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 8)
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -233,7 +230,7 @@ def get_spark(app_name: str = "ie_spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * cores, 8)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "128m")

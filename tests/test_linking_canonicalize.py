@@ -233,13 +233,14 @@ def _resume_copy(crashed, tmp_path):
 
 
 def test_resumable_bucketed_job(spark, tmp_path, monkeypatch, crashed,
-                                kg_tables):
+                                kg_tables, staged_at_link):
     """A run that crashed after extraction resumes from its per-bucket
     checkpoints: the second call extracts nothing and ends with the
     tables of a clean run."""
     df, n_turns, _ = crashed
     out = _resume_copy(crashed, tmp_path)
     before = _bucket_files(out)
+    staged = staged_at_link(out)
     parts = spark.sparkContext.defaultParallelism * 2
 
     def no_extraction(*args, **kwargs):
@@ -249,7 +250,7 @@ def test_resumable_bucketed_job(spark, tmp_path, monkeypatch, crashed,
         s = run.run_pipeline(spark, df, out)
     assert s["resumed"] == list(range(parts))
     assert s["n_turns"] == n_turns
-    assert _bucket_files(out) == before
+    assert staged["files"] == before
     clean = str(tmp_path / "clean")
     run.run_pipeline(spark, df, clean)
     assert kg_tables(out) == kg_tables(clean)
@@ -275,7 +276,8 @@ def test_skew_salting_repartition(spark):
     assert pid > 1
 
 
-def test_extraction_job_is_single_pass(spark, tmp_path, monkeypatch):
+def test_extraction_job_is_single_pass(spark, tmp_path, monkeypatch,
+                                      staged_at_link):
     """run_pipeline does not loop buckets on the driver: it runs the same
     number of Spark jobs at 8 and at 128 buckets."""
     tr, _, _ = corpus_to_pandas(n_convs=30, seed=7)
@@ -292,14 +294,15 @@ def test_extraction_job_is_single_pass(spark, tmp_path, monkeypatch):
         finally:
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
+    staged = staged_at_link(str(tmp_path / "job64"))
     n8, n128 = jobs(4), jobs(64)
     assert 0 < n8 == n128, f"{n8} jobs at 8 buckets, {n128} at 128"
     # _extracted is laid out as real _bucket partitions
-    assert _bucket_files(str(tmp_path / "job64"))
+    assert staged["files"]
 
 
 def test_extraction_job_partial_resume(spark, tmp_path, monkeypatch,
-                                       crashed):
+                                       crashed, staged_at_link):
     """Buckets with an open checkpoint row are skipped; only the rest are
     extracted and rewritten (per-partition resume)."""
     df, n_turns, _ = crashed
@@ -307,6 +310,7 @@ def test_extraction_job_partial_resume(spark, tmp_path, monkeypatch,
     before = _bucket_files(out)
     kept = sorted(before)[:2]
     _keep_open(spark, out, kept)
+    staged = staged_at_link(out)
     seen = []
 
     def spy(transcripts):
@@ -321,7 +325,7 @@ def test_extraction_job_partial_resume(spark, tmp_path, monkeypatch,
     bucket = F.pmod(F.hash("conv_id"), F.lit(parts))
     extracted = {r[0] for r in seen[0].select(bucket).distinct().collect()}
     assert extracted == set(before) - set(kept)
-    after = _bucket_files(out)
+    after = staged["files"]
     assert set(after) == set(before)
     for b in before:
         assert (after[b] == before[b]) == (b in kept), b
@@ -383,7 +387,8 @@ def test_coref_fanout_bounded_by_window(spark):
     assert got == n
 
 
-def test_extraction_job_heals_torn_bucket_writes(spark, tmp_path, crashed):
+def test_extraction_job_heals_torn_bucket_writes(spark, tmp_path, crashed,
+                                                 staged_at_link):
     """Crash recovery: files left by a failed attempt in a bucket whose
     checkpoint row never committed are REPLACED on re-run, not appended
     to."""
@@ -401,13 +406,14 @@ def test_extraction_job_heals_torn_bucket_writes(spark, tmp_path, crashed):
     assert spark.read.parquet(staged).count() > n_clean  # corrupted
     # the torn bucket's row never committed → it alone reprocesses
     _keep_open(spark, out, rest)
+    snap = staged_at_link(out)
     s = run.run_pipeline(spark, df, out)
     assert s["resumed"] == rest
-    assert spark.read.parquet(staged).count() == n_clean
+    assert snap["rows"] == n_clean
 
 
 def test_extraction_job_clears_stale_files_for_empty_buckets(
-        spark, tmp_path, crashed):
+        spark, tmp_path, crashed, staged_at_link):
     """A re-processed bucket whose input became empty must still have its
     torn files dropped, and a fully-empty first run must not crash on
     read-back schema inference."""
@@ -419,9 +425,10 @@ def test_extraction_job_clears_stale_files_for_empty_buckets(
     _keep_open(spark, out, rest)
     parts = spark.sparkContext.defaultParallelism * 2
     df_missing = df.filter(F.pmod(F.hash("conv_id"), F.lit(parts)) != victim)
+    staged = staged_at_link(out)
     s = run.run_pipeline(spark, df_missing, out)
     assert s["resumed"] == []  # another input: a fresh extraction
-    left = [b for b in _bucket_files(out) if b == victim]
+    left = [b for b in staged["files"] if b == victim]
     assert not left, f"stale bucket dir survived: {left}"
     # fully-empty first run: no crash, all-zero checkpoints
     out2 = str(tmp_path / "jobempty")

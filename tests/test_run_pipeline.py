@@ -40,25 +40,25 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert s2["n_triples"] == s1["n_triples"]
 
 
-def _files_per_bucket(out):
-    """{bucket dir: parquet file count} of a run's ``_extracted`` table."""
-    staged = os.path.join(out, "_extracted")
-    return {d: sum(f.endswith(".parquet")
-                   for f in os.listdir(os.path.join(staged, d)))
-            for d in os.listdir(staged) if d.startswith("_bucket=")}
+def _files_per_bucket(staged):
+    """{bucket: parquet file count} of a ``staged_at_link`` snapshot of a
+    run's ``_extracted`` table."""
+    return {b: len(fs) for b, fs in staged["files"].items()}
 
 
-def test_run_pipeline_salts_mega_conversations(spark, tmp_path):
+def test_run_pipeline_salts_mega_conversations(spark, tmp_path,
+                                              staged_at_link):
     """North rule: mega-conversations found by the count pre-pass are
     salted across partitions inside run_pipeline."""
     tr, gt, _ = corpus_to_pandas(n_convs=20, seed=13, mega_frac=0.3,
                                  mega_mult=30)
     df = transcripts_from_pandas(spark, tr)
     out = str(tmp_path / "kg_salted")
+    staged = staged_at_link(out)
     s = run_pipeline(spark, df, out, salt_threshold=100)
     assert s["n_turns"] == len(tr)
     # the bucket follows the salted partitioning too
-    assert set(_files_per_bucket(out).values()) == {1}
+    assert set(_files_per_bucket(staged).values()) == {1}
     # same P/R contract holds under salted repartition
     triples = spark.read.parquet(os.path.join(out, "triples"))
     got = {tuple(r) for r in
@@ -122,6 +122,39 @@ def test_kb_change_between_runs_equals_cold_rebuild(
     assert kg_tables(inc) == kg_tables(cold)
 
 
+def test_completed_run_keeps_one_copy(spark, tmp_path):
+    """A completed run, cold or incremental, leaves its six tables and
+    ``_checkpoints`` and no ``_extracted``, and its node and edge counts
+    are the row counts of the tables it wrote."""
+    out = str(tmp_path / "kg")
+    for rows in (BASE, DELTA):
+        s = run_pipeline(spark, _turns(spark, rows), out)
+        assert sorted(os.listdir(out)) == [
+            "_checkpoints", "coref", "edges", "linked", "mentions", "nodes",
+            "triples"]
+        for t in ("nodes", "edges"):
+            n = spark.read.parquet(os.path.join(out, t)).count()
+            assert s[f"n_{t}"] == n, t
+
+
+def test_run_pipeline_job_budget(spark, tmp_path):
+    """One cold run over 15 conversations runs at most 49 Spark jobs: the
+    sink counts the rows of the tables it writes on their write jobs and
+    reads every table back with the schema it wrote, so no job scans a
+    table just to count it or to infer its schema (a sink that read its
+    tables back that way ran 58)."""
+    tr, _, _ = corpus_to_pandas(n_convs=15, seed=33)
+    df = transcripts_from_pandas(spark, tr)
+    sc = spark.sparkContext
+    sc.setJobGroup("job_budget_probe", "count jobs")
+    try:
+        run_pipeline(spark, df, str(tmp_path / "kg"))
+    finally:
+        sc.setJobGroup("", "")
+    n = len(sc.statusTracker().getJobIdsForGroup("job_budget_probe"))
+    assert 0 < n <= 49, n
+
+
 def test_resume_after_finished_run_counts_only_its_input(
         spark, tmp_path, monkeypatch, kg_tables):
     """A delta run that crashed after extraction, on top of a finished base
@@ -143,17 +176,19 @@ def test_resume_after_finished_run_counts_only_its_input(
     assert kg_tables(inc) == kg_tables(cold)
 
 
-def test_extracted_one_file_per_bucket(spark, tmp_path):
+def test_extracted_one_file_per_bucket(spark, tmp_path, staged_at_link):
     """The resume bucket is the conv_id repartition's partition, so each
     extraction task writes one bucket: no more files than buckets."""
     tr, _, _ = corpus_to_pandas(n_convs=15, seed=33)
     out = str(tmp_path / "kg")
+    staged = staged_at_link(out)
     run_pipeline(spark, transcripts_from_pandas(spark, tr), out)
-    files = _files_per_bucket(out)
+    files = _files_per_bucket(staged)
     assert files and set(files.values()) == {1}, files
 
 
-def test_run_pipeline_relative_out_dir(spark, tmp_path, monkeypatch):
+def test_run_pipeline_relative_out_dir(spark, tmp_path, monkeypatch,
+                                      staged_at_link):
     """A relative out_dir resolves against the Python working directory,
     and no table target is mistaken for an Iceberg table name."""
     probes = []
@@ -161,9 +196,12 @@ def test_run_pipeline_relative_out_dir(spark, tmp_path, monkeypatch):
                         lambda s: probes.append(s) or False)
     monkeypatch.chdir(tmp_path)
     tr, _, _ = corpus_to_pandas(n_convs=5, seed=33)
+    staged = staged_at_link("kg")
     run_pipeline(spark, transcripts_from_pandas(spark, tr), "kg")
-    for t in ("_extracted", "mentions", "triples", "linked", "coref",
+    assert any(staged["files"].values())
+    for t in ("mentions", "triples", "linked", "coref",
               "nodes", "edges", "_checkpoints"):
         assert any(f.endswith(".parquet") for _, _, fs in
                    os.walk(tmp_path / "kg" / t) for f in fs), t
+    assert not (tmp_path / "kg" / "_extracted").exists()
     assert probes == []
